@@ -214,14 +214,12 @@ def _verify_jaccard(
         .join(gb, b_col)
         .withColumn(
             "jaccard",
-            F.round(
-                F.size(F.array_intersect("grams_a", "grams_b"))
-                / F.size(F.array_union("grams_a", "grams_b")),
-                6,
-            ),
+            F.size(F.array_intersect("grams_a", "grams_b"))
+            / F.size(F.array_union("grams_a", "grams_b")),
         )
+        # threshold on the raw ratio (as the oracles do); round only the output
         .filter(F.col("jaccard") >= threshold)
-        .select(a_col, b_col, "jaccard")
+        .select(a_col, b_col, F.round("jaccard", 6).alias("jaccard"))
     )
 
 
@@ -277,7 +275,20 @@ def ngram_jaccard_pairs(
 
     Plan: one agg for DF, one shuffle join posting⋈DF, one per-doc window to
     rank, prefix self-equi-join on gram, exact verify.  Never |docs|².
+    The gram and prefix tables stay persisted: the returned plan reads them.
     """
+    return _ngram_jaccard_pairs(df, text_col, id_col, n, threshold)[0]
+
+
+def _ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.8,
+) -> tuple[DataFrame, tuple[DataFrame, ...]]:
+    """:func:`ngram_jaccard_pairs` plus the tables it persisted, for callers
+    that can release them once the pairs are consumed."""
     from pyspark import StorageLevel
 
     from ..session import spread
@@ -302,7 +313,7 @@ def ngram_jaccard_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    return _verify_jaccard(candidates, grams, threshold)
+    return _verify_jaccard(candidates, grams, threshold), (grams, prefix)
 
 
 # -- 3. MinHash + banded LSH ---------------------------------------------------
@@ -378,7 +389,22 @@ def minhash_lsh_pairs(
 
     Scale: signature is 64×8 bytes/doc; band keys hash-shuffle uniformly; the
     bucket self-join only pairs docs sharing a band signature.
+    The gram table stays persisted: the returned plan reads it.
     """
+    return _minhash_lsh_pairs(df, text_col, id_col, n, num_hashes, bands, verify_threshold)[0]
+
+
+def _minhash_lsh_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    num_hashes: int = 64,
+    bands: int = 16,
+    verify_threshold: float = 0.5,
+) -> tuple[DataFrame, tuple[DataFrame, ...]]:
+    """:func:`minhash_lsh_pairs` plus the table it persisted, for callers
+    that can release it once the pairs are consumed."""
     from pyspark import StorageLevel
 
     from ..session import ensure_shipped, spread
@@ -391,16 +417,17 @@ def minhash_lsh_pairs(
     # corpus scale this is exactly the "write grams to a temp table" pattern.
     # gram sets as 64-bit hashes: the signature kernel consumes hashes
     # anyway (it used to re-hash string grams JVM-side first), and the
-    # verify join's exact Jaccard over long arrays is value-identical
+    # verify join's exact Jaccard over long arrays is value-identical.
+    # The band keys are a column of the persisted table, so the Python
+    # kernel runs once per doc, not once per self-join side.
+    keys_udf = minhash_band_keys_udf(num_hashes, bands)
     grams = (
         gram_hash_table(spread(df), text_col, id_col, n)
         .select("id", F.col("ghs").alias("grams"))
+        .withColumn("bkeys", keys_udf(F.col("grams")))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    keys_udf = minhash_band_keys_udf(num_hashes, bands)
-    banded = grams.select("id", F.posexplode(keys_udf(F.col("grams")))).toDF(
-        "id", "band", "bkey"
-    )
+    banded = grams.select("id", F.posexplode("bkeys")).toDF("id", "band", "bkey")
     x, y = banded.alias("x"), banded.alias("y")
     candidates = (
         x.join(
@@ -412,7 +439,7 @@ def minhash_lsh_pairs(
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .distinct()
     )
-    return _verify_jaccard(candidates, grams, verify_threshold)
+    return _verify_jaccard(candidates, grams, verify_threshold), (grams,)
 
 
 # -- 4. SimHash ----------------------------------------------------------------
@@ -547,6 +574,18 @@ def _ckpt(df: DataFrame, reliable: bool) -> DataFrame:
     return df.checkpoint(eager=True)
 
 
+def _two_rows(df: DataFrame, first, second, names=("s", "d")) -> DataFrame:
+    """Each row of ``df`` as two rows with columns ``names``: the ``first``
+    and the ``second`` tuple of Columns, from ONE read of ``df``.  The
+    ``a.union(b)`` form over the same lazy ``df`` plans ``df`` twice (Spark
+    has no common-subplan reuse across union branches), so a pair list built
+    by joins and UDFs would run end to end once per branch."""
+    rows = [F.struct(*[c.alias(n) for c, n in zip(cols, names)]) for cols in (first, second)]
+    return df.select(F.explode(F.array(*rows)).alias("__r")).select(
+        *[F.col(f"__r.{n}").alias(n) for n in names]
+    )
+
+
 def _alternating_star(edges: DataFrame, reliable: bool, max_rounds: int = 50) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14): converges in O(log² n)
@@ -575,7 +614,7 @@ def _alternating_star(edges: DataFrame, reliable: bool, max_rounds: int = 50) ->
     E = _ckpt(E, reliable)
     for _ in range(max_rounds):
         # large-star over the symmetric neighborhood
-        sym = E.select("u", "v").union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        sym = _two_rows(E, (F.col("u"), F.col("v")), (F.col("v"), F.col("u")), ("u", "v"))
         mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
         large = (
             sym.join(mins, "u")
@@ -589,8 +628,7 @@ def _alternating_star(edges: DataFrame, reliable: bool, max_rounds: int = 50) ->
         mn = o.groupBy("u").agg(F.min("v").alias("m"))
         joined = o.join(mn, "u")
         small = (
-            joined.select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .union(joined.select(F.col("u").alias("a"), F.col("m").alias("b")))
+            _two_rows(joined, (F.col("v"), F.col("m")), (F.col("u"), F.col("m")), ("a", "b"))
             .filter(F.col("a") != F.col("b"))
             .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
             .distinct()
@@ -624,9 +662,13 @@ def connected_components(
 
     Iterative min-label propagation, all DataFrame ops:
 
+    * the symmetric edge list (every pair in both directions, distinct) is
+      built from ONE read of ``pairs`` and checkpointed, so the pair plan
+      runs exactly once and callers need not persist it;
     * labels start as ``node → node``;
     * each round every node takes ``min(own label, min over neighbors'
-      labels)`` via one equi-join on node id + one hash aggregate;
+      labels)`` via one equi-join of edges to labels + one hash aggregate,
+      left-joined back onto the labels and checkpointed;
     * stop when a round changes nothing (driver-side count per round — a
       scalar, not a collect of data).
 
@@ -646,9 +688,7 @@ def connected_components(
     if checkpoint_dir is not None:
         pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
     edges = _ckpt(
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .union(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .distinct(),
+        _two_rows(pairs, (F.col(src), F.col(dst)), (F.col(dst), F.col(src))).distinct(),
         reliable,
     )
     labels = edges.select(F.col("s").alias("node")).distinct().withColumn("comp", F.col("node"))

@@ -430,16 +430,22 @@ class Pipeline:
         exact-verified) → connected components → keep one representative per
         cluster (min id, or the highest-``scores`` member when a
         ``(id_col, q)`` frame is given) → anti-join the drop-list.  Every
-        stage is bucketed/blocked — no all-pairs comparison at any scale."""
+        stage is bucketed/blocked — no all-pairs comparison at any scale.
+        The tables the pair search persists are released once the clusters
+        are checkpointed; nothing reads them after that."""
         from .operators import dedupe as _dd
 
         if method == "jaccard":
-            pairs = _dd.ngram_jaccard_pairs(self._df, text_col, id_col, threshold=threshold)
+            pairs, held = _dd._ngram_jaccard_pairs(self._df, text_col, id_col, threshold=threshold)
         elif method == "minhash":
-            pairs = _dd.minhash_lsh_pairs(self._df, text_col, id_col, verify_threshold=threshold)
+            pairs, held = _dd._minhash_lsh_pairs(
+                self._df, text_col, id_col, verify_threshold=threshold
+            )
         else:
             raise ValueError(f"unknown dedupe method: {method!r}")
         comps = _dd.connected_components(pairs)
+        for t in held:
+            t.unpersist()
         keep = (
             _dd.keep_best(comps, scores, id_col=id_col) if scores is not None
             else _dd.keep_list(comps)

@@ -5281,20 +5281,8 @@ def dedup_semantic(spark, sf_dir):
         .collect()
     )
     centroids = [[float(x) for x in r[0]] for r in cent]
-    from pyspark import StorageLevel
-
-    # persist: connected_components re-references the pair list every
-    # label-propagation round; without this the 780k-pair cosine join
-    # recomputes per round
-    pairs = similarity.semantic_dup_pairs(emb, centroids, threshold=0.45).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        out = dedupe.keep_list(dedupe.connected_components(pairs)).orderBy("node")
-        rows, schema = out.collect(), out.schema
-    finally:
-        pairs.unpersist()
-    return spark.createDataFrame(rows, schema)
+    pairs = similarity.semantic_dup_pairs(emb, centroids, threshold=0.45)
+    return dedupe.keep_list(dedupe.connected_components(pairs)).orderBy("node")
 
 
 @register(

@@ -5,6 +5,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# The session default heap (24g) can exceed the host's RAM; a JVM allowed to
+# grow past it is OOM-killed mid-suite although its live set after a full GC
+# is a few hundred MB.  Cap the test session's driver heap unless set.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 from pipeflow_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -644,6 +644,21 @@ def test_connected_components_deep_chain_star_fallback(spark):
     assert comp == {**{i: 0 for i in range(60)}, 100: 100, 101: 100}
 
 
+def test_connected_components_reads_pairs_once(spark, monkeypatch):
+    """The symmetric edge list is built from ONE read of the pair plan: the
+    frame handed to the first checkpoint has the pairs' source leaf once,
+    with no Union (the union form ran a lazy pair plan end to end twice)."""
+    pairs = spark.range(10).select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
+    handed = []
+    ckpt = dedupe._ckpt
+    monkeypatch.setattr(dedupe, "_ckpt", lambda df, reliable: handed.append(df) or ckpt(df, reliable))
+    comp = {r.node: r.component for r in dedupe.connected_components(pairs).collect()}
+    assert comp == {i: 0 for i in range(11)}
+    plan = handed[0]._jdf.queryExecution().optimizedPlan()
+    assert plan.collectLeaves().size() == 1
+    assert "Union" not in plan.toString()
+
+
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
     """reliable=True uses checkpoint() storage (survives executor loss on a
     real cluster): files land in the checkpoint dir and results are equal."""

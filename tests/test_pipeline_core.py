@@ -4,6 +4,7 @@ PipeFlow.Tests/PipelineTests.cs — same fixture (F1 persons), same assertions,
 DataFrame implementation.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipeflow_spark import Pipeline
@@ -151,6 +152,22 @@ def test_fluent_curation_chain(spark):
     assert ids == [1, 5]
     r1 = next(r for r in out if r.doc_id == 1)
     assert "<EMAIL>" in r1.text and r1.n_email >= 1 and r1.q > 0.45
+
+
+@pytest.mark.parametrize("method", ["jaccard", "minhash"])
+def test_dedupe_near_releases_persisted_tables(spark, method):
+    """The pair search persists its gram tables; dedupe_near releases them
+    once the clusters are checkpointed, so the session's cache is empty
+    after the pipeline ran and the result is still right."""
+    base = "the quick brown fox jumps over the lazy dog and then runs far away home tonight"
+    docs = spark.createDataFrame(
+        [(1, base), (2, base + " again"), (3, "an unrelated document about spark shuffles")],
+        "doc_id bigint, text string",
+    )
+    spark.catalog.clearCache()
+    p = Pipeline(docs).dedupe_near(threshold=0.7, method=method)
+    assert p.count() == 2
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_fluent_budget_and_spike_bridges(spark):

@@ -3,8 +3,9 @@
 These cover invariants that example-based tests can't sweep: arbitrary cell
 values through the xlsx writer/parser, arbitrary JSON shapes through the API
 envelope rules, arbitrary centroid geometry through IVF probe selection, and
-arbitrary column sets through upsert-SQL generation.  All driver-side pure
-functions — no Spark jobs, so the whole module runs in seconds.
+arbitrary column sets through upsert-SQL generation.  Almost all are
+driver-side pure functions; the dedupe properties at the end run small Spark
+jobs (the Jaccard threshold boundary, connected components vs union-find).
 """
 
 import io
@@ -13,7 +14,8 @@ import math
 import zipfile
 
 import numpy as np
-from hypothesis import given, settings
+import pytest
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
 from pipeflow_spark.excel import _cell_xml, _col_to_idx, _idx_to_col, parse_xlsx
@@ -483,3 +485,61 @@ def test_avro_split_ownership_partitions_exactly(rows_per_block, raw_cuts):
         for s, e in zip(cuts, cuts[1:]):
             got.extend(r["id"] for r in avro_py._decode_ranged(path, s, e))
         assert sorted(got) == list(range(n))
+
+
+# -- dedupe: Jaccard threshold boundary, connected components (Spark jobs) ---
+
+from pipeflow_spark.operators import dedupe  # noqa: E402
+
+
+@settings(max_examples=3, deadline=None)
+@example(shared=2, union=3)  # 2/3 = 0.66666666…: rounds UP at 6 dp
+@given(shared=st.integers(min_value=1, max_value=199), union=st.integers(min_value=2, max_value=200))
+def test_verify_jaccard_filters_raw_ratio(spark, shared, union):
+    """A pair is kept at threshold == its exact Jaccard and dropped one ulp
+    above it: the oracles compare the raw ratio, so the 6-dp rounding shapes
+    only the output column, never the filter."""
+    assume(shared < union)
+    ratio = shared / union
+    grams = spark.createDataFrame(
+        [(1, list(range(union))), (2, list(range(shared)))], "id bigint, grams array<bigint>"
+    )
+    cand = spark.createDataFrame([(1, 2)], "id_a bigint, id_b bigint")
+    kept = dedupe._verify_jaccard(cand, grams, ratio).collect()
+    assert len(kept) == 1 and math.isclose(kept[0].jaccard, ratio, abs_tol=5e-7)
+    assert dedupe._verify_jaccard(cand, grams, math.nextafter(ratio, 1.0)).count() == 0
+
+
+def _union_find_min(edges):
+    """node → smallest node of its component (roots are always the min)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+@pytest.mark.parametrize("max_iter", [25, 1])  # 1 forces the star fallback
+@settings(max_examples=4, deadline=None)
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(min_value=0, max_value=9), st.integers(min_value=0, max_value=9)),
+        min_size=1,
+        max_size=10,
+    )
+)
+def test_connected_components_equals_union_find(spark, max_iter, edges):
+    pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+    got = {
+        r.node: r.component
+        for r in dedupe.connected_components(pairs, max_iter=max_iter).collect()
+    }
+    assert got == _union_find_min(edges)
