@@ -213,7 +213,7 @@ def complex_pipeline(spark, workdir: str, api_url: str):
     if top.success:
         rows = [r.asDict() for r in top.data]
         doc = read.collection(spark, rows, "id bigint, amount double, date date")
-        sinks.collect_json_document(doc.df, out, order_by=["amount"])
+        sinks.collect_json_document(doc.df, out, order_by=[F.desc("amount")])
     return out, top
 
 

@@ -25,19 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedupe import gram_hash_posting, gram_table
-
-
-def eval_gram_set(eval_df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 8) -> DataFrame:
-    """Distinct word ``n``-grams of the eval corpus as a one-column frame
-    ``(g)`` — the string form, for callers that need readable grams."""
-    from ..session import spread
-
-    return (
-        gram_table(spread(eval_df), text_col, id_col, n=n)
-        .select(F.explode("grams").alias("g"))
-        .distinct()
-    )
+from .dedupe import gram_hash_posting
 
 
 def eval_gram_hashes(
@@ -174,7 +162,7 @@ def neardup_contamination(
     from pyspark import StorageLevel
 
     from ..session import ensure_shipped, spread
-    from .dedupe import _verify_jaccard, gram_hash_table, minhash_band_keys_udf
+    from .dedupe import _ckpt, _verify_jaccard, gram_hash_table, minhash_band_keys_udf
 
     ensure_shipped(train_df.sparkSession)
     keys_udf = minhash_band_keys_udf(num_hashes, bands)
@@ -185,12 +173,11 @@ def neardup_contamination(
         F.col("id").alias(eval_id_col), F.posexplode(keys_udf(F.col("grams")))
     ).toDF(eval_id_col, "band", "bkey")
     # the train gram table feeds both the band pass and the verify join —
-    # persisted for the same reason (and with the same lifetime caveat) as
-    # minhash_lsh_pairs: Spark has no common-subplan reuse across join
-    # branches, and at corpus scale this is the "write grams to a temp
-    # table" pattern (MEMORY_AND_DISK spills rather than OOMs; a long-lived
-    # session doing many sweeps should materialize the gram table to
-    # parquet once instead and pass it through explicitly)
+    # persisted for the same reason as minhash_lsh_pairs: Spark has no
+    # common-subplan reuse across join branches, and at corpus scale this
+    # is the "write grams to a temp table" pattern (MEMORY_AND_DISK spills
+    # rather than OOMs).  It is released before returning, once the
+    # verified pairs are checkpointed.
     tr = (
         gram_hash_table(spread(train_df), text_col, id_col, n)
         .select("id", F.col("ghs").alias("grams"))
@@ -205,8 +192,14 @@ def neardup_contamination(
         .distinct()
     )
     # shared exact-verify (dedupe._verify_jaccard): zero false positives by
-    # construction; eval side broadcast (benchmark-tiny)
-    return _verify_jaccard(
-        cand, tr, threshold,
-        grams_b=ev, a_col=id_col, b_col=eval_id_col, broadcast_b=True,
+    # construction; eval side broadcast (benchmark-tiny).  The verified pairs
+    # are contaminated-doc-sized, so checkpointing them is cheap.
+    pairs = _ckpt(
+        _verify_jaccard(
+            cand, tr, threshold,
+            grams_b=ev, a_col=id_col, b_col=eval_id_col, broadcast_b=True,
+        ),
+        reliable=False,
     )
+    tr.unpersist()
+    return pairs

@@ -122,11 +122,6 @@ def hash_uniform(col: Column) -> Column:
     return (h + F.lit(1.0)) / F.lit(4294967296.0)
 
 
-def hash_uniform_sql(expr: str) -> str:
-    """DuckDB twin of :func:`hash_uniform`, as a SQL fragment."""
-    return f"((('0x' || substr(md5(({expr})::VARCHAR), 1, 8))::BIGINT + 1.0) / 4294967296.0)"
-
-
 def stratified_sample_topk(
     df: DataFrame, strata_cols: list[str], k: int, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -327,23 +322,16 @@ def temperature_weights(
     """
     size = F.count("*") if count_col is None else F.sum(count_col)
     g = df.groupBy(group_col).agg(size.cast("double").alias("n"))
-    # totals via 1-row broadcast aggregates rather than an unpartitioned
-    # window — g is only |slices| rows, but the broadcast form keeps the
-    # plan single-partition-free on principle (and readable in the audit)
-    total = g.agg(F.sum("n").alias("_tot"))
-    p_tbl = g.crossJoin(F.broadcast(total)).select(
-        group_col,
-        "n",
-        (F.col("n") / F.col("_tot")).alias("p"),
-        F.pow(F.col("n") / F.col("_tot"), F.lit(float(alpha))).alias("pw"),
-    )
-    z = p_tbl.agg(F.sum("pw").alias("_z"))
-    scaled = p_tbl.crossJoin(F.broadcast(z)).withColumn(
-        "weight", F.col("pw") / F.col("_z")
-    )
-    return scaled.select(
+    # both normalizers in ONE 1-row broadcast aggregate over g, rather than
+    # an unpartitioned window — g is only |slices| rows, but the broadcast
+    # form keeps the plan single-partition-free on principle (and readable
+    # in the audit).  p^α / Σ p^α = n^α / Σ n^α, so the weights need only
+    # these two sums and the input is read once per side of the join.
+    pw = F.pow(F.col("n"), F.lit(float(alpha)))
+    norm = g.agg(F.sum("n").alias("_tot"), F.sum(pw).alias("_z"))
+    return g.crossJoin(F.broadcast(norm)).select(
         group_col,
         F.col("n").cast("bigint").alias("n"),
-        F.round("p", ndigits).alias("p"),
-        F.round("weight", ndigits).alias("weight"),
+        F.round(F.col("n") / F.col("_tot"), ndigits).alias("p"),
+        F.round(pw / F.col("_z"), ndigits).alias("weight"),
     ).orderBy(group_col)

@@ -340,6 +340,8 @@ class Pipeline:
         and the 100 TB plan shape."""
         from .operators import lm as _lm
 
+        if out in self._df.columns:
+            raise ValueError(f"perplexity_filter: out={out!r} is already a column")
         tdf = train.df if isinstance(train, Pipeline) else train
         scores = _lm.lm_cross_entropy(
             self._df, tdf, add_k=add_k, text_col=text_col, id_col=id_col
@@ -431,18 +433,21 @@ class Pipeline:
         cluster (min id, or the highest-``scores`` member when a
         ``(id_col, q)`` frame is given) → anti-join the drop-list.  Every
         stage is bucketed/blocked — no all-pairs comparison at any scale.
-        The tables the pair search persists are released once the clusters
+
+        The input is checkpointed once and both the pair search and the
+        final anti-join read that checkpoint, so the upstream plan runs
+        once, not again in whatever action consumes the result.  The
+        tables the pair search persists are released once the clusters
         are checkpointed; nothing reads them after that."""
         from .operators import dedupe as _dd
 
-        if method == "jaccard":
-            pairs, held = _dd._ngram_jaccard_pairs(self._df, text_col, id_col, threshold=threshold)
-        elif method == "minhash":
-            pairs, held = _dd._minhash_lsh_pairs(
-                self._df, text_col, id_col, verify_threshold=threshold
-            )
-        else:
+        if method not in ("jaccard", "minhash"):
             raise ValueError(f"unknown dedupe method: {method!r}")
+        df = _dd._ckpt(self._df, reliable=False)
+        if method == "jaccard":
+            pairs, held = _dd._ngram_jaccard_pairs(df, text_col, id_col, threshold=threshold)
+        else:
+            pairs, held = _dd._minhash_lsh_pairs(df, text_col, id_col, verify_threshold=threshold)
         comps = _dd.connected_components(pairs)
         for t in held:
             t.unpersist()
@@ -451,7 +456,7 @@ class Pipeline:
             else _dd.keep_list(comps)
         )
         drops = keep.filter(~F.col("keep")).select(F.col("node").alias(id_col))
-        return self._wrap(self._df.join(drops, id_col, "left_anti"))
+        return self._wrap(df.join(drops, id_col, "left_anti"))
 
     def budget_cap(
         self, key_col: str, order_col: str, weight_col: str, quota: int,

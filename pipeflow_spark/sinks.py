@@ -30,7 +30,7 @@ import tempfile
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -775,7 +775,7 @@ class jdbc:  # noqa: N801 — fluent exit, mirrors reference `.ToSql/.ToPostgreS
 
 
 def collect_json_document(
-    df: DataFrame, path: str, order_by: Sequence[str] = (), append: bool = False
+    df: DataFrame, path: str, order_by: Sequence[str | Column] = (), append: bool = False
 ) -> None:
     """The reference's whole-array JSON *document* shape (JsonWriter.cs:47-75)
     — driver-side, for small results only (it materializes).

@@ -669,7 +669,7 @@ class StreamingPipeline:
         if eval_df.isStreaming:
             raise ValueError("decontaminate: eval side must be a batch DataFrame")
         from ..operators.decontaminate import eval_gram_hashes
-        from ..operators.dedupe import _gram_hashes_of, normalize_text
+        from ..operators.dedupe import _gram_hashes_of, _token_hashes, normalize_text
 
         evset = eval_gram_hashes(eval_df, text_col, id_col, n=n)
         # token-hash-combine gram keys, explode fused into the projection
@@ -679,9 +679,7 @@ class StreamingPipeline:
         toked = self._df.select(
             id_col, ts_col, F.split(normalize_text(F.col(text_col)), r"\s+").alias("__toks")
         )
-        th = toked.select(
-            id_col, ts_col, F.transform("__toks", lambda t: F.xxhash64(t)).alias("__th")
-        )
+        th = toked.select(id_col, ts_col, _token_hashes("__toks").alias("__th"))
         posting = th.select(
             id_col, ts_col, F.explode(F.array_distinct(_gram_hashes_of("__th", n))).alias("gh")
         )

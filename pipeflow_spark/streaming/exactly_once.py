@@ -144,9 +144,6 @@ class ExactlyOnceSink:
         self.fail_after_write_batch_id = fail_after_write_batch_id
 
     # -- commit protocol (delegated to the shared BatchLedger) ---------------
-    def _high_water_mark(self) -> int:
-        return self._ledger.high_water()
-
     def is_committed(self, batch_id: int) -> bool:
         return self._ledger.is_committed(batch_id)
 

@@ -40,7 +40,7 @@ def test_modern_api_usage_all_narratives(spark, tmp_path, examples_mod):
     doc = json.load(open(json_path))
     assert top.success and 0 < len(doc) <= 100
     amounts = [r["amount"] for r in doc]
-    assert amounts == sorted(amounts)  # document ordered by amount
+    assert amounts == sorted(amounts, reverse=True)  # OrderByDescending(Amount)
     # 6. batch: in-stock rows posted to the API sink in batches
     assert out["batch"] > 0 and out["api_posts"] > 0
 

@@ -659,6 +659,23 @@ def test_connected_components_reads_pairs_once(spark, monkeypatch):
     assert "Union" not in plan.toString()
 
 
+def test_connected_components_starts_one_hop_in(spark, monkeypatch):
+    """Labels start at min(node, min neighbour id), so disjoint pairs and a
+    star around its min id are final before the loop: the checkpoints are
+    the edges, the initial labels, then ONE round, which only confirms."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (5, 3), (10, 11), (10, 12), (13, 10)], "id_a bigint, id_b bigint"
+    )
+    handed = []
+    ckpt = dedupe._ckpt
+    monkeypatch.setattr(
+        dedupe, "_ckpt", lambda df, reliable: handed.append(df.columns) or ckpt(df, reliable)
+    )
+    comp = {r.node: r.component for r in dedupe.connected_components(pairs).collect()}
+    assert comp == {1: 1, 2: 1, 3: 3, 5: 3, 10: 10, 11: 10, 12: 10, 13: 10}
+    assert handed == [["s", "d"], ["node", "comp"], ["node", "comp", "_chg"]]
+
+
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
     """reliable=True uses checkpoint() storage (survives executor loss on a
     real cluster): files land in the checkpoint dir and results are equal."""
@@ -2523,6 +2540,17 @@ def test_temperature_weights_hand_math(spark):
     assert nat == {"small": 0.1, "big": 0.9}
 
 
+def test_temperature_weights_reads_input_twice_at_most(spark):
+    """The plan reads the input once for the slice table and once for its
+    one normalizer aggregate, and no more (a derived per-slice table read
+    once per join side would double that)."""
+    from pipeflow_spark.operators import sampling
+
+    df = spark.createDataFrame([(i, "ab"[i % 2]) for i in range(6)], "doc_id int, source string")
+    plan = sampling.temperature_weights(df)._jdf.queryExecution().optimizedPlan()
+    assert plan.collectLeaves().size() == 2
+
+
 def test_neardup_contamination_catches_paraphrase(spark):
     """Fuzzy decontamination must flag a lightly-edited copy of an eval doc
     (high 3-gram Jaccard) and ignore unrelated text; exact-verify bounds
@@ -2541,9 +2569,12 @@ def test_neardup_contamination_catches_paraphrase(spark):
         ],
         "doc_id bigint, text string",
     )
+    spark.catalog.clearCache()
     rows = deco.neardup_contamination(train, ev, threshold=0.5).collect()
     assert [(r.doc_id, r.eval_id) for r in rows] == [(100, 1)]
     assert rows[0].jaccard >= 0.5
+    # the train gram table it persisted is released before it returns
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_quantizer_save_load_roundtrip_and_corruption(spark, tmp_path):

@@ -155,18 +155,26 @@ def test_fluent_curation_chain(spark):
 
 
 @pytest.mark.parametrize("method", ["jaccard", "minhash"])
-def test_dedupe_near_releases_persisted_tables(spark, method):
+def test_dedupe_near_releases_persisted_tables(spark, tmp_path, method):
     """The pair search persists its gram tables; dedupe_near releases them
     once the clusters are checkpointed, so the session's cache is empty
-    after the pipeline ran and the result is still right."""
+    after the pipeline ran and the result is still right.  Its input is
+    checkpointed too, and both the pair search and the final anti-join read
+    that checkpoint: the plan it returns has no file scan left, so the
+    action that consumes it does not run the upstream chain a second time."""
+    from pipeflow_spark import read
+
     base = "the quick brown fox jumps over the lazy dog and then runs far away home tonight"
-    docs = spark.createDataFrame(
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
         [(1, base), (2, base + " again"), (3, "an unrelated document about spark shuffles")],
         "doc_id bigint, text string",
-    )
+    ).write.parquet(path)
     spark.catalog.clearCache()
-    p = Pipeline(docs).dedupe_near(threshold=0.7, method=method)
-    assert p.count() == 2
+    p = read.parquet(spark, path).filter(F.length("text") > 0).dedupe_near(threshold=0.7, method=method)
+    leaves = p.df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    assert {leaves.apply(i).nodeName() for i in range(leaves.size())} == {"LogicalRDD"}
+    assert sorted(r.doc_id for r in p.to_list()) == [1, 3]
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -259,3 +267,11 @@ def test_perplexity_filter_fluent(spark):
     assert {r.doc_id: r.ppl_xent for r in scored} == {
         d: x for d, x in ref.items() if x <= thresh
     }
+
+
+def test_perplexity_filter_rejects_existing_out_column(spark):
+    """out= naming a column the frame already has would join a second,
+    ambiguous column of that name back on: refused up front."""
+    docs = spark.createDataFrame([(1, "the quick brown fox", 0.5)], "doc_id int, text string, q double")
+    with pytest.raises(ValueError, match="already a column"):
+        Pipeline(docs).perplexity_filter(docs, max_xent=10.0, out="q")
