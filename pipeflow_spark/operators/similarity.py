@@ -62,29 +62,14 @@ def random_hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> np.ndarr
     return rng.standard_normal((n_planes, dim))
 
 
-def _bucket_expr(vec_col: Column, planes: np.ndarray) -> Column:
-    """Sign-bit bucket id: bit_i = (vec · plane_i) > 0 — pure Column algebra;
-    the plane matrix rides along as plan literals."""
-    bits = [
-        F.when(_dot(vec_col, F.array(*[F.lit(float(x)) for x in plane])) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        for i, plane in enumerate(planes)
-    ]
-    acc = bits[0]
-    for b in bits[1:]:
-        acc = acc + b
-    return acc.cast("long")
-
-
 def _lsh_buckets_udf(planes: np.ndarray, bands: int, band_planes: int):
     """Arrow sign-LSH bucketing kernel: per row, ``bands`` bucket ids, bit i
-    of band j = ``(vec · planes[j·bp + i]) > 0``.  Exact Column semantics —
-    dots accumulate in ascending dim order (the ``F.aggregate`` fold; the
-    sign margin is also ≫ float noise on this data, see :func:`bucket_sql`),
-    NULL/wrong-length vectors get bucket 0 in every band (a NULL dot fails
-    ``> 0``).  Planes ride the closure: the Column form plans
-    bands·band_planes·dim literals (3072 at the dedupe defaults, ~6 s of
-    Catalyst planning + interpreted per-element lambda eval, measured) while
-    this is one vectorized pass per Arrow batch."""
+    of band j = ``(vec · planes[j·bp + i]) > 0``.  Dots accumulate in
+    ascending dim order (the sign margin is ≫ float noise on this data, see
+    :func:`bucket_sql`, its DuckDB twin); NULL/wrong-length vectors get
+    bucket 0 in every band.  Planes ride the closure, so the plan size is
+    constant — a plan-literal form would carry bands·band_planes·dim
+    literals (3072 at the dedupe defaults)."""
     from pyspark.sql.functions import pandas_udf
 
     P = np.ascontiguousarray(planes, dtype=np.float64)
@@ -100,7 +85,7 @@ def _lsh_buckets_udf(planes: np.ndarray, bands: int, band_planes: int):
         out = np.zeros((n, bands), dtype=np.int64)
         if ok.any():
             acc = np.zeros((len(X), n_planes))
-            for i in range(dim):  # ascending-dim adds — the Column fold order
+            for i in range(dim):  # ascending-dim adds
                 acc += X[:, i, None] * P[None, :, i]
             bits = (acc > 0).astype(np.int64)
             weights = 1 << np.arange(band_planes, dtype=np.int64)
@@ -118,29 +103,20 @@ def build_lsh_buckets(
     seed: int = 42,
     vec_col: str = "embedding",
     dim: int | None = None,
-    method: str = "arrow",
 ) -> DataFrame:
     """Assign every vector a sign-LSH bucket.  At scale this is the *write*
     side: persist partitioned/bucketed by ``bucket`` so probes prune.
 
-    ``method='arrow'`` (default): planes ride the UDF closure — constant
-    plan size.  ``method='column'``: plan-literal form, zero Python,
-    bit-identical (parity pytest-pinned).
-
     Pass ``dim`` explicitly in production — the fallback learns it from a
     driver-side ``first()`` at plan-build time, which is an extra job and
     assumes the table is non-empty."""
-    if method not in ("arrow", "column"):
-        raise ValueError(f"method must be 'arrow' or 'column', got {method!r}")
     if dim is None:
         dim = len(embeddings.select(vec_col).first()[0])
     planes = random_hyperplanes(dim, n_planes, seed)
     v = F.col(vec_col).cast("array<double>")
-    if method == "arrow":
-        return embeddings.withColumn(
-            "bucket", F.get(_lsh_buckets_udf(planes, 1, n_planes)(v), 0)
-        )
-    return embeddings.withColumn("bucket", _bucket_expr(v, planes))
+    return embeddings.withColumn(
+        "bucket", F.get(_lsh_buckets_udf(planes, 1, n_planes)(v), 0)
+    )
 
 
 def lsh_topk(
@@ -256,10 +232,7 @@ def cosine_dup_pairs(
         dim = len(embeddings.select(vec_col).first()[0])
     planes = random_hyperplanes(dim, bands * band_planes, seed)
     v = F.col(vec_col).cast("array<double>")
-    # Arrow bucketing kernel: one vectorized pass computes all 12 band
-    # buckets per row (the plan-literal _bucket_expr form carries
-    # bands·band_planes·dim literals and evaluates its fold lambdas
-    # interpreted — measured as the dominant cost of this operator)
+    # one vectorized pass computes all 12 band buckets per row
     band_buckets = _lsh_buckets_udf(planes, bands, band_planes)(v)
     # narrow posting: ids only — carrying the float vectors through the
     # banded self-join shuffles |candidates| × 2 vectors (~1 KB/row at
@@ -303,8 +276,9 @@ def cosine_dup_pairs(
 
 
 def bucket_sql(vec_expr: str, dim: int, n_planes: int, seed: int = 42, offset: int = 0) -> str:
-    """ANSI-SQL twin of :func:`_bucket_expr` for the DuckDB oracles: the same
-    seed-42 Gaussian planes embedded as array literals, the same sign-bit sum.
+    """ANSI-SQL twin of the LSH bucketing kernel for the DuckDB oracles: the
+    same seed-42 Gaussian planes embedded as array literals, the same sign-bit
+    sum.
     ``offset`` selects a band's plane slice out of a larger
     ``random_hyperplanes(dim, offset + n_planes, seed)`` matrix (banded LSH).
     Sign decisions are numerically safe on this data (min |dot| ≈ 9e-5 at
@@ -410,8 +384,7 @@ def train_ivf_centroids(
 
 
 def _centroid_norms(C: np.ndarray) -> np.ndarray:
-    """Centroid L2 norms with the same scalar fold order as
-    ``sqrt(_dot(c, c))`` — one float64 add per ascending dim."""
+    """Centroid L2 norms, one float64 add per ascending dim."""
     n_lists, dim = C.shape
     cn = np.empty(n_lists)
     for li in range(n_lists):
@@ -425,8 +398,8 @@ def _centroid_norms(C: np.ndarray) -> np.ndarray:
 def _assign_matrix(X: np.ndarray, C: np.ndarray, cn: np.ndarray) -> np.ndarray:
     """0-based argmax-cosine list per row of ``X`` — the single home for the
     assignment math: per-dim products accumulated left-to-right in ascending
-    dim order (the ``F.aggregate`` fold), 6-dp half-up rounding, zero-norm →
-    the -2.0 sentinel (→ list 0 after the first-maximum tiebreak).  Shared
+    dim order, 6-dp half-up rounding, zero-norm → the -2.0 sentinel (→ list
+    0 after the first-maximum tiebreak).  Shared
     by the standalone assignment kernel and the fused IVFADC encoder so the
     two are bit-identical by construction."""
     n_lists, dim = C.shape
@@ -447,12 +420,10 @@ def _assign_matrix(X: np.ndarray, C: np.ndarray, cn: np.ndarray) -> np.ndarray:
 
 
 def _ivf_assign_udf(centroids):
-    """Arrow assignment kernel: per row, the 1-based argmax-cosine list with
-    the EXACT semantics of the Column form (see :func:`_assign_matrix`);
-    NULL/wrong-length rows → the all-sentinel argmax → list 1.  Centroids
-    ride the closure, so the plan carries zero per-centroid literals — the
-    Column form's n_lists·dim literal matrix costs Catalyst ~1.5 s of
-    planning at 16×64 (measured), per fresh plan."""
+    """Arrow assignment kernel: per row, the 1-based argmax-cosine list (see
+    :func:`_assign_matrix`); NULL/wrong-length rows → the all-sentinel
+    argmax → list 1.  Centroids ride the closure, so the plan carries zero
+    per-centroid literals."""
     from pyspark.sql.functions import pandas_udf
 
     C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
@@ -478,17 +449,10 @@ def ivf_assign(
     centroids,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "arrow",
 ) -> DataFrame:
     """Add a 1-based ``list_id`` column: the max-cosine centroid (ties →
     lowest list id; zero-norm vectors → list of the -2.0 sentinel, i.e.
     list 1 after ties).  One narrow projection, no shuffle.
-
-    ``method='arrow'`` (default): centroids ride the UDF closure — constant
-    plan size (the scale path; at 16 lists × 64 dims the literal matrix
-    costs Catalyst ~1.5 s of planning per fresh plan, measured).
-    ``method='column'``: the plan-literal Column form, zero Python —
-    bit-identical values (parity pytest-pinned).
 
     Write side at scale: persist ``partitionBy("list_id")`` so probe-time
     ``isin`` filters prune partitions (same pattern as LSH buckets).
@@ -496,21 +460,8 @@ def ivf_assign(
     oracle twin (cross-join + window argmax over the same rounded cosine)
     agrees exactly.
     """
-    if method not in ("arrow", "column"):
-        raise ValueError(f"method must be 'arrow' or 'column', got {method!r}")
     v = F.col(vec_col).cast("array<double>")
-    if method == "arrow":
-        return embeddings.withColumn("list_id", _ivf_assign_udf(centroids)(v))
-    sims = F.array(
-        *[
-            F.coalesce(
-                _round6_col(cosine(v, F.array(*[F.lit(float(x)) for x in c]).cast("array<double>"))),
-                F.lit(-2.0),
-            )
-            for c in centroids
-        ]
-    )
-    return embeddings.withColumn("list_id", F.array_position(sims, F.array_max(sims)).cast("int"))
+    return embeddings.withColumn("list_id", _ivf_assign_udf(centroids)(v))
 
 
 def ivf_probes(centroids, query_vec: list[float], nprobe: int) -> list[int]:
@@ -698,9 +649,9 @@ def semantic_dup_pairs(
 def _pq_lut(books: np.ndarray, q: np.ndarray) -> list[list[float]]:
     """The m×k asymmetric-distance lookup table for (residual-)query ``q``:
     explicit left-to-right accumulation over ascending dims — the SAME fold
-    as :func:`_sub_sqdist` and the SQL twins' unrolled sums, so the 6-dp
-    rounding sees identical doubles on every engine.  Single home for the
-    ulp-sensitive arithmetic (pq_topk and ivfpq_topk both call it)."""
+    as :func:`_pq_accumulate_codes` and the SQL twins' unrolled sums, so the
+    6-dp rounding sees identical doubles on every engine.  Single home for
+    the ulp-sensitive arithmetic (pq_topk and ivfpq_topk both call it)."""
     m, k, d = books.shape
     out = []
     for j in range(m):
@@ -741,12 +692,8 @@ def _rescore_exact(
 def _kmeans_one_subspace(
     S: np.ndarray, k: int, iters: int, seed: int, j: int
 ) -> np.ndarray:
-    """Lloyd's k-means for ONE subspace — the single home for the training
-    math, called by both the driver loop and the grouped executor kernel so
-    the two paths are bit-identical by construction.  The rng is seeded
-    per-subspace (``default_rng([seed, j])``): no state flows between
-    subspaces, which is exactly what makes the training embarrassingly
-    parallel."""
+    """Lloyd's k-means for ONE subspace.  The rng is seeded per subspace
+    (``default_rng([seed, j])``), so no state flows between subspaces."""
     rng = np.random.default_rng([seed, j])
     C = S[rng.choice(len(S), size=k, replace=False)].copy()
     for _ in range(iters):
@@ -768,22 +715,14 @@ def train_pq_codebooks(
     iters: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "driver",
 ) -> np.ndarray:
     """Train PQ codebooks (Jégou et al., "Product Quantization for Nearest
     Neighbor Search", TPAMI 2011): split the vector into ``m`` subspaces of
     ``dim/m`` dims and run Lloyd's k-means with ``k`` centroids per
     subspace on a bounded deterministic sample (same recipe as
     :func:`train_ivf_centroids`).  Returns ``(m, k, dim/m)`` float64.
-
-    ``method='driver'`` (default, right for small m·k·d) loops the subspaces
-    in one process; ``method='grouped'`` ships each subspace's sample slice
-    to an ``applyInPandas`` group keyed on the subspace index, so the ``m``
-    independent k-means runs train in parallel on executors (the shape that
-    matters when m·iters·sample·d grows — e.g. wide embeddings with m=32).
-    Both paths call :func:`_kmeans_one_subspace` with per-subspace seeds, so
-    grouped ≡ driver bit-for-bit (property-pinned in
-    ``test_pq_codebooks_grouped_equals_driver``).
+    Training runs on the driver: the sample is bounded, and the books are
+    m·k·d floats whatever the corpus size.
 
     .. note:: The per-subspace seeding changed the training draws in r4
        (previously one rng threaded sequentially through the subspaces), so
@@ -796,12 +735,7 @@ def train_pq_codebooks(
     512 B of float64 — a 128× compression of the scan column; int8
     quantization (:func:`quantize_embeddings`) stops at 8×).
     """
-    if method not in ("driver", "grouped"):
-        raise ValueError(f"method must be 'driver' or 'grouped', got {method!r}")
-    sample_df = embeddings.select(id_col, vec_col).orderBy(id_col).limit(sample)
-    if method == "grouped":
-        return _train_pq_grouped(sample_df, m, k, dim, seed, iters, id_col, vec_col)
-    rows = sample_df.collect()
+    rows = embeddings.select(id_col, vec_col).orderBy(id_col).limit(sample).collect()
     if len(rows) < k:
         raise ValueError(
             f"PQ training needs at least k={k} sample vectors, got {len(rows)}"
@@ -820,116 +754,19 @@ def train_pq_codebooks(
     return books
 
 
-def _train_pq_grouped(
-    sample_df: DataFrame,
-    m: int,
-    k: int,
-    dim: int | None,
-    seed: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-) -> np.ndarray:
-    """Executor-side PQ training: explode the bounded sample into one row
-    per (subspace, vector) carrying just that subspace's ``d`` dims, then
-    one ``applyInPandas`` group per subspace runs the shared k-means
-    kernel.  Each group sorts by the sample rank so its matrix is row-for-
-    row the same ``S`` the driver loop sees."""
-    import pandas as pd  # noqa: F401  (executor-side)
-
-    n = sample_df.count()  # bounded (≤ sample rows) — cheap driver-side gate
-    if n < k:
-        raise ValueError(
-            f"PQ training needs at least k={k} sample vectors, got {n}"
-        )
-    first = sample_df.select(vec_col).first()
-    if dim is None:
-        dim = len(first[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    d = dim // m
-    v = F.col(vec_col).cast("array<double>")
-    exploded = sample_df.select(
-        F.col(id_col).alias("rid"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("j"), F.slice(v, j * d + 1, d).alias("sub")
-                )
-                for j in range(m)
-            ])
-        ).alias("e"),
-    ).select("rid", F.col("e.j").alias("j"), F.col("e.sub").alias("sub"))
-
-    def fit(pdf):
-        import pandas as pd
-
-        j = int(pdf["j"].iloc[0])
-        # mergesort = stable: with duplicate ids an unstable sort could order
-        # tied rows differently per group (and differently from the driver
-        # path), changing the k-means init draws (code-review r4).  id_col
-        # should still be unique — it is the sample's total order.
-        pdf = pdf.sort_values("rid", kind="mergesort")
-        S = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["sub"]])
-        if len(S) < k:
-            raise ValueError(
-                f"PQ training needs at least k={k} sample vectors, got {len(S)}"
-            )
-        C = _kmeans_one_subspace(S, k, iters, seed, j)
-        return pd.DataFrame(
-            {"j": j, "c": np.arange(k, dtype=np.int32), "centroid": [list(r) for r in C]}
-        )
-
-    out = (
-        exploded.groupBy("j")
-        .applyInPandas(fit, schema="j int, c int, centroid array<double>")
-        .collect()
-    )
-    books = np.empty((m, k, d), dtype=np.float64)
-    for r in out:
-        books[r.j, r.c] = np.asarray(r.centroid, dtype=np.float64)
-    return books
-
-
 def _round6_half_up(x: np.ndarray) -> np.ndarray:
     """Explicit round-half-away-from-zero to 6 dp — the rounding mode Spark
     (``F.round`` on DOUBLE, HALF_UP) and DuckDB (``round``) both apply.
     ``np.round`` is half-EVEN, which diverges when a value lands exactly on
     a representable 0.5e-6 boundary; this makes the numpy kernels match the
-    Column path and the SQL twins by construction instead of by documented
-    luck (ADVICE r3)."""
+    SQL twins by construction instead of by documented luck (ADVICE r3)."""
     return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
-
-
-def _round6_col(x: Column) -> Column:
-    """Column twin of :func:`_round6_half_up`: explicit float-math
-    half-away-from-zero to 6 dp (``signum(x)·⌊|x|·1e6 + 0.5⌋/1e6``).  The
-    JVM evaluates the identical IEEE-754 double multiply/add/floor sequence
-    as the numpy kernel, so arrow and column method twins agree
-    BY CONSTRUCTION — ``F.round`` on DOUBLE rounds via BigDecimal over the
-    shortest decimal repr, which can differ from float-math rounding by one
-    last digit when a value lands within ~1 ulp of a .5e-6 boundary (and
-    DuckDB's ``round`` is float-math, i.e. on the kernel's side)."""
-    return F.signum(x) * F.floor(F.abs(x) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
-
-def _sub_sqdist(v: Column, j: int, centroid, d: int) -> Column:
-    """Rounded squared L2 distance between subvector j of ``v`` and a
-    centroid literal — the shared kernel of encode and LUT, so both engines
-    (and both stages) agree bit-for-bit.  Left-to-right sum over ascending
-    dims, rounded to 6 dp with the float-math mode (:func:`_round6_col`)
-    the numpy twins use."""
-    acc = None
-    for i in range(d):
-        t = (F.get(v, j * d + i) - F.lit(float(centroid[i]))) ** 2
-        acc = t if acc is None else acc + t
-    return _round6_col(acc)
 
 
 def _pq_accumulate_codes(X: np.ndarray, B: np.ndarray) -> np.ndarray:
     """The shared code-assignment kernel: left-to-right ascending-dim float64
     accumulation (one add per dim into the (rows, k) accumulator — the exact
-    order of the Column fold and the SQL twins) and first-minimum argmin on
+    order of the SQL twins' unrolled sums) and first-minimum argmin on
     the 6-dp-rounded distances.  SINGLE home for the ulp-sensitive loop:
     both encoder UDFs call this."""
     m, k, d = B.shape
@@ -946,7 +783,7 @@ def _pq_accumulate_codes(X: np.ndarray, B: np.ndarray) -> np.ndarray:
 def _rows_matrix(vs: "pd.Series", dim: int):
     """(valid_mask, matrix of the valid rows): NULL or wrong-length
     embeddings are masked out instead of crashing the Arrow batch — they
-    get NULL codes, mirroring what the Column path emitted for them."""
+    get NULL codes (and list 1 from the assignment kernels)."""
     ok = np.fromiter(
         (v is not None and len(v) == dim for v in vs), dtype=bool, count=len(vs)
     )
@@ -959,18 +796,14 @@ def _rows_matrix(vs: "pd.Series", dim: int):
 
 
 def _pq_codes_udf(books: np.ndarray):
-    """Arrow-vectorized PQ code assignment.  Arithmetic is the SAME
-    left-to-right ascending-dim accumulation as :func:`_sub_sqdist` — the
-    per-dim squared difference is added into the accumulator matrix one dim
-    at a time, so every float64 add happens in the identical order as the
-    Column fold and the SQL twin; ``np.argmin`` returns the first (lowest
-    index) minimum, matching ``array_position(array_min)``; the 6-dp
-    rounding is explicit half-away-from-zero (:func:`_round6_half_up`),
-    the same mode Spark's ``F.round`` and DuckDB's ``round`` apply — so
-    boundary distances agree by construction.  Pinned against the Column
-    path on the full test corpus in tests/test_operators.py, and
-    continuously guarded by the oracle differential (the registry queries
-    run THIS path)."""
+    """Arrow-vectorized PQ code assignment (:func:`_pq_accumulate_codes`):
+    the per-dim squared difference is added into the accumulator matrix one
+    dim at a time, in the order of the SQL twin's unrolled sum;
+    ``np.argmin`` returns the first (lowest index) minimum, matching the
+    twin's ``ORDER BY d2, cid``; the 6-dp rounding is explicit
+    half-away-from-zero (:func:`_round6_half_up`), the mode DuckDB's
+    ``round`` applies — so boundary distances agree by construction.
+    Checked row by row against DuckDB in tests/test_operators.py."""
     from pyspark.sql.functions import pandas_udf
 
     m, k, d = books.shape
@@ -993,14 +826,12 @@ def _ivfpq_fused_udf(books: np.ndarray, centroids):
     Arrow pass — the embedding column (the widest column in the table)
     crosses the JVM↔Python boundary once instead of twice (assign UDF +
     encode UDF), and only ``(list_id, codes)`` come back.  Assignment math
-    is :func:`_assign_matrix`, residual encode is
-    :func:`_pq_accumulate_codes` — the exact kernels of the two-stage path,
-    so fused ≡ staged bit-for-bit (parity pytest-pinned).  Invalid rows
-    (NULL/wrong-length) keep the two-stage semantics: list 1 (all-sentinel
-    argmax) with NULL codes."""
+    is :func:`_assign_matrix` (shared with :func:`ivf_assign`), residual
+    encode is :func:`_pq_accumulate_codes` (shared with :func:`pq_encode`).
+    Invalid rows (NULL/wrong-length) get list 1 (all-sentinel argmax) with
+    NULL codes, as in those two."""
     from pyspark.sql.functions import pandas_udf
 
-    m, k, d = books.shape
     B = np.ascontiguousarray(books, dtype=np.float64)
     C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
     dim = C.shape[1]
@@ -1023,45 +854,6 @@ def _ivfpq_fused_udf(books: np.ndarray, centroids):
         return pd.DataFrame({"list_id": lists_out, "codes": codes_out})
 
     return enc
-
-
-def _ivfpq_codes_udf(books: np.ndarray, centroids):
-    """Residual PQ codes in one Arrow pass: subtract the row's coarse
-    centroid (``v − C[list_id−1]``, float64 elementwise — the same
-    subtraction as the ``zip_with`` form), then the shared
-    :func:`_pq_codes_udf` accumulation."""
-    from pyspark.sql.functions import pandas_udf
-
-    m, k, d = books.shape
-    B = np.ascontiguousarray(books, dtype=np.float64)
-    C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
-
-    @pandas_udf("array<int>")
-    def _enc(vs: pd.Series, lists: pd.Series) -> pd.Series:
-        dim = m * d
-        ok = np.fromiter(
-            (
-                v is not None and len(v) == dim and li is not None
-                and 1 <= int(li) <= len(C)
-                for v, li in zip(vs, lists)
-            ),
-            dtype=bool,
-            count=len(vs),
-        )
-        if ok.any():
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v, o in zip(vs, ok) if o]
-            )
-            li = lists[ok].to_numpy(dtype=np.int64) - 1
-            codes = _pq_accumulate_codes(X - C[li], B)
-        else:
-            codes = np.empty((0, m), np.int32)
-        out, it = [], iter(codes)
-        for o in ok:
-            out.append(next(it).tolist() if o else None)
-        return pd.Series(out, dtype=object)
-
-    return _enc
 
 
 def codebook_fingerprint(arr, kind: str = "pq-codebooks-v2") -> str:
@@ -1110,58 +902,29 @@ def pq_encode(
     codebooks,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "udf",
 ) -> DataFrame:
     """Add ``codes``: per subspace, the 0-based index of the nearest
     codebook centroid (rounded squared L2; ties → lowest index, mirroring
     the IVF argmax convention so the DuckDB twin agrees exactly).
 
-    ``method='udf'`` (default): one Arrow pandas-UDF pass — the scale path
-    (the batch travels once through a Python worker; no shuffle, no state).
-    NULL or wrong-length embeddings get NULL codes rather than failing the
-    batch.  ``method='column'``: the plan-literal Column form — no Python
-    workers, but its m·k·d expression tree costs ~10 s of Catalyst planning
-    per fresh plan at 8×16×8 (planning, not rows — measured flat from 500
-    to 5000 rows); kept for plan-inspection and as the arithmetic
-    reference the UDF is parity-pinned against.  Write ``codes`` next to
-    (or instead of) the float column; the ADC scan (:func:`pq_topk`) then
-    never touches floats except for rescore finalists."""
-    if method not in ("udf", "column"):
-        raise ValueError(f"method must be 'udf' or 'column', got {method!r}")
+    One Arrow pandas-UDF pass (the batch travels once through a Python
+    worker; no shuffle, no state).  NULL or wrong-length embeddings get
+    NULL codes rather than failing the batch.  Write ``codes`` next to (or
+    instead of) the float column; the ADC scan (:func:`pq_topk`) then never
+    touches floats except for rescore finalists."""
     books = np.asarray(codebooks, dtype=np.float64)
-    m, k, d = books.shape
     v = F.col(vec_col).cast("array<double>")
-    meta = {"pq_fingerprint": codebook_fingerprint(books)}
-    if method == "udf":
-        # the scale default: one Arrow batch pass.  The Column form below is
-        # plan-literal-only and its m*k*d expression tree costs ~10 s of
-        # Catalyst planning per fresh plan at 8x16x8 — planning, not rows,
-        # dominates it (measured flat from 500 to 5000 rows)
-        return embeddings.withColumn(
-            "codes", _pq_codes_udf(books)(v)
-        ).withMetadata("codes", meta)
-    code_cols = []
-    for j in range(m):
-        dists = F.array(*[_sub_sqdist(v, j, books[j][c], d) for c in range(k)])
-        code_cols.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
-    # invalid rows (NULL/wrong-length embedding) must get a whole-NULL codes
-    # column like the udf path — the raw F.array would yield an array OF
-    # NULL elements, which passes a codes-IS-NOT-NULL guard and then
-    # poisons the ADC scan (code-review r4)
-    valid = v.isNotNull() & (F.size(v) == m * d)
-    return embeddings.withColumn(
-        "codes", F.when(valid, F.array(*code_cols)).otherwise(F.lit(None))
-    ).withMetadata("codes", meta)
+    return embeddings.withColumn("codes", _pq_codes_udf(books)(v)).withMetadata(
+        "codes", {"pq_fingerprint": codebook_fingerprint(books)}
+    )
 
 
 def _adc_scan_udf(luts: dict[int, np.ndarray] | np.ndarray):
     """Arrow ADC scan kernel: ``codes (+ list_id) → Σ_j LUT[j][codes[j]]``,
     rounded half-up to 6 dp.  The LUT ships in the closure (one broadcast
-    per query), so the plan carries ZERO per-centroid literals — the
-    plan-literal Column form costs Catalyst seconds of planning at
-    nprobe·m·k literals (same trap as the encode side, measured and
-    documented in SURVEY §10).  The per-j add order is ascending, identical
-    to the Column fold and the SQL twins, so values agree bit-for-bit."""
+    per query), so the plan carries ZERO per-centroid literals.  The per-j
+    add order is ascending, identical to the SQL twins' ``sum(… ORDER BY
+    j)``, so values agree bit-for-bit."""
     from pyspark.sql.functions import pandas_udf
 
     per_list = isinstance(luts, dict)
@@ -1226,19 +989,14 @@ def pq_topk(
     rescore: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "arrow",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: the query's per-subspace distance to
     every centroid is a tiny ``m × k`` lookup table computed ONCE, and each
     row's approximate distance is ``Σ_j LUT[j][codes[j]]`` — m array lookups
     and adds per row, no float-vector arithmetic anywhere in the scan.
-    Output ``(id_col, adist)`` ascending (ties → id).
-
-    ``method='arrow'`` (default): the LUT rides the UDF closure and the scan
-    is one vectorized gather-accumulate per Arrow batch — constant plan
-    size.  ``method='column'``: the plan-literal Column form (m·k literals;
-    Catalyst planning cost grows with the codebook — retained as the
-    no-Python twin, bit-identical values).
+    Output ``(id_col, adist)`` ascending (ties → id).  The LUT rides the
+    UDF closure and the scan is one vectorized gather-accumulate per Arrow
+    batch — constant plan size.
 
     ``rescore > 0`` re-ranks that many ADC finalists by exact cosine and
     returns ``(id_col, sim)`` descending — the IVF/int8 two-stage pattern;
@@ -1248,13 +1006,9 @@ def pq_topk(
     Scale: the ADC scan reads codes only (4 B/row at 8×16) — the cheapest
     candidate generator in the family; LUT cost is O(m·k·d) once per query.
     """
-    if method not in ("arrow", "column"):
-        raise ValueError(f"method must be 'arrow' or 'column', got {method!r}")
     books = np.asarray(codebooks, dtype=np.float64)
     _check_codes_fingerprint(encoded, {"pq_fingerprint": codebook_fingerprint(books)})
-    m, k, d = books.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    lut = _pq_lut(books, q)
+    lut = _pq_lut(books, np.asarray(query_vec, dtype=np.float64))
     # null-masked rows (NULL/wrong-length embeddings get NULL codes from the
     # Arrow encoder, hence NULL adist) are not candidates: Spark ASC sorts
     # NULLS FIRST, which would put them at the head of the top-k (ADVICE r3).
@@ -1264,16 +1018,8 @@ def pq_topk(
     live = encoded.filter(
         F.col("codes").isNotNull() & F.forall(F.col("codes"), lambda c: c.isNotNull())
     )
-    if method == "arrow":
-        adist_col = _adc_scan_udf(np.asarray(lut))(F.col("codes"))
-        scored = live.select(F.col(id_col), adist_col.alias("adist"))
-    else:
-        adist = None
-        for j in range(m):
-            lut_j = F.array(*[F.lit(x) for x in lut[j]])
-            t = F.get(lut_j, F.get("codes", j))
-            adist = t if adist is None else adist + t
-        scored = live.select(F.col(id_col), _round6_col(adist).alias("adist"))
+    adist = _adc_scan_udf(np.asarray(lut))(F.col("codes"))
+    scored = live.select(F.col(id_col), adist.alias("adist"))
     # asc_nulls_last: a NULL/NaN adist (null-masked codes that slipped a
     # guard, or an unmatched list_id in the per-list kernel) must never
     # occupy a top-k slot — Spark ASC default is NULLS FIRST (code-review r5)
@@ -1294,7 +1040,6 @@ def ivfpq_encode(
     codebooks,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "fused",
 ) -> DataFrame:
     """IVFADC encoding (Jégou et al. TPAMI'11 §IV): assign each vector to
     its coarse inverted list (:func:`ivf_assign`), then PQ-encode the
@@ -1302,35 +1047,25 @@ def ivfpq_encode(
     a small codebook quantizes them far better than raw vectors, which is
     why every billion-scale system (FAISS IVFADC) uses this composition.
 
-    Adds ``list_id`` (1-based) and ``codes`` (m small ints).
-    ``method='fused'`` (default): ONE Arrow pass does assignment + residual
-    encode — the embedding column (the fattest column of an ingest at
-    100 TB) crosses the JVM↔Python boundary once and only 5 bytes/row come
-    back.  ``method='staged'``: :func:`ivf_assign` then the residual
-    encoder — for callers that already carry ``list_id``.  Same kernels,
-    bit-identical outputs (parity pytest-pinned); NULL/wrong-length
-    embeddings get list 1 with NULL codes in both.  Write partitioned by
-    ``list_id``: probe-time pruning then reads nprobe/n_lists of a corpus
-    whose data column is 4 bytes/row.
+    Adds ``list_id`` (1-based) and ``codes`` (m small ints).  ONE Arrow
+    pass does assignment + residual encode — the embedding column (the
+    fattest column of an ingest at 100 TB) crosses the JVM↔Python boundary
+    once and only 5 bytes/row come back.  NULL/wrong-length embeddings get
+    list 1 with NULL codes.  Write partitioned by ``list_id``: probe-time
+    pruning then reads nprobe/n_lists of a corpus whose data column is
+    4 bytes/row.
     """
-    if method not in ("fused", "staged"):
-        raise ValueError(f"method must be 'fused' or 'staged', got {method!r}")
     books = np.asarray(codebooks, dtype=np.float64)
     v = F.col(vec_col).cast("array<double>")
     meta = {
         "pq_fingerprint": codebook_fingerprint(books),
         "ivf_fingerprint": codebook_fingerprint(centroids, kind="ivf-centroids-v1"),
     }
-    if method == "fused":
-        out = embeddings.withColumn("__enc", _ivfpq_fused_udf(books, centroids)(v))
-        return out.select(
-            *embeddings.columns,
-            F.col("__enc.list_id").alias("list_id"),
-            F.col("__enc.codes").alias("codes"),
-        ).withMetadata("codes", meta)
-    assigned = ivf_assign(embeddings, centroids, id_col=id_col, vec_col=vec_col)
-    return assigned.withColumn(
-        "codes", _ivfpq_codes_udf(books, centroids)(v, F.col("list_id"))
+    out = embeddings.withColumn("__enc", _ivfpq_fused_udf(books, centroids)(v))
+    return out.select(
+        *embeddings.columns,
+        F.col("__enc.list_id").alias("list_id"),
+        F.col("__enc.codes").alias("codes"),
     ).withMetadata("codes", meta)
 
 
@@ -1344,26 +1079,19 @@ def ivfpq_topk(
     rescore: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "arrow",
 ) -> DataFrame:
     """IVFADC search: probe the ``nprobe`` coarse lists nearest the query
     (:func:`ivf_probes` — ``isin`` partition pruning), and inside each
     probed list rank by the PQ approximate distance of the query's
     PER-LIST residual (``q − centroid[list]``) — one m×k LUT per probed
     list.  Output ``(id_col, adist)`` ascending (ties → id), or
-    exact-cosine rescore of ``rescore`` finalists when requested.
-
-    ``method='arrow'`` (default): the nprobe LUTs ride the UDF closure —
-    constant plan size regardless of nprobe·m·k (the plan-literal form
-    builds a nested CASE WHEN of nprobe·m·k literals, which costs Catalyst
-    real planning time — same measured trap as the encode side, SURVEY
-    §10).  ``method='column'`` retains that no-Python twin, bit-identical.
+    exact-cosine rescore of ``rescore`` finalists when requested.  The
+    nprobe LUTs ride the UDF closure — constant plan size regardless of
+    nprobe·m·k.
 
     Scale: bytes read ≈ |corpus| × nprobe/n_lists × 4 B — the two prunings
     compose multiplicatively; this is the standard billion-vector recipe.
     """
-    if method not in ("arrow", "column"):
-        raise ValueError(f"method must be 'arrow' or 'column', got {method!r}")
     books = np.asarray(codebooks, dtype=np.float64)
     _check_codes_fingerprint(
         encoded,
@@ -1372,7 +1100,6 @@ def ivfpq_topk(
             "ivf_fingerprint": codebook_fingerprint(centroids, kind="ivf-centroids-v1"),
         },
     )
-    m, k, d = books.shape
     probes = ivf_probes(centroids, query_vec, nprobe)
     q = np.asarray(query_vec, dtype=np.float64)
     luts = {
@@ -1387,23 +1114,8 @@ def ivfpq_topk(
         & F.col("codes").isNotNull()
         & F.forall(F.col("codes"), lambda c: c.isNotNull())
     )
-    if method == "arrow":
-        adist_col = _adc_scan_udf(luts)(F.col("codes"), F.col("list_id"))
-        scored = live.select(F.col(id_col), adist_col.alias("adist"))
-    else:
-        adist = None
-        for li in probes:
-            t = None
-            for j in range(m):
-                lut_j = F.array(*[F.lit(float(x)) for x in luts[li][j]])
-                term = F.get(lut_j, F.get("codes", j))
-                t = term if t is None else t + term
-            adist = (
-                F.when(F.col("list_id") == li, t)
-                if adist is None
-                else adist.when(F.col("list_id") == li, t)
-            )
-        scored = live.select(F.col(id_col), _round6_col(adist).alias("adist"))
+    adist = _adc_scan_udf(luts)(F.col("codes"), F.col("list_id"))
+    scored = live.select(F.col(id_col), adist.alias("adist"))
     # asc_nulls_last: a NULL/NaN adist (null-masked codes that slipped a
     # guard, or an unmatched list_id in the per-list kernel) must never
     # occupy a top-k slot — Spark ASC default is NULLS FIRST (code-review r5)

@@ -75,6 +75,17 @@ def quality_score(col: Column) -> Column:
     )
 
 
+# DuckDB twin of :func:`quality_score`, unrounded: oracles that compare the
+# score write ``round(…, 6)`` around it, as the Column form does.
+QUALITY_SQL = """
+      0.4 * (length(regexp_extract_all(text, '[A-Za-z]')) * 1.0 / greatest(length(text), 1))
+    + 0.3 * least(length(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|you|that|it|for)\\b')) * 1.0
+                  / greatest(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END, 1), 1.0)
+    + 0.2 * least(length(text) / 500.0, 1.0)
+    + 0.1 * (1 - length(regexp_extract_all(text, '[^\\sA-Za-z0-9]')) * 1.0 / greatest(length(text), 1))
+"""
+
+
 def normalize_text(col: Column) -> Column:
     """Canonical form for fingerprinting/dedupe: lowercase, collapse
     whitespace, trim."""

@@ -1748,13 +1748,9 @@ def lang_distribution(spark, sf_dir):
 
 @register(
     "quality_histogram",
-    """
+    f"""
     SELECT round(floor(q * 10) / 10, 1) AS bucket, count(*) AS n FROM (
-      SELECT 0.4 * (length(regexp_extract_all(text, '[A-Za-z]')) * 1.0 / greatest(length(text), 1))
-           + 0.3 * least(length(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|you|that|it|for)\\b')) * 1.0
-                         / greatest(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END, 1), 1.0)
-           + 0.2 * least(length(text) / 500.0, 1.0)
-           + 0.1 * (1 - length(regexp_extract_all(text, '[^\\sA-Za-z0-9]')) * 1.0 / greatest(length(text), 1)) AS q
+      SELECT {text.QUALITY_SQL} AS q
       FROM documents
     ) GROUP BY 1 ORDER BY 1
     """,
@@ -1767,15 +1763,6 @@ def quality_histogram(spark, sf_dir):
         .agg(F.count("*").alias("n"))
         .orderBy("bucket")
     )
-
-
-_QUALITY_SQL = """
-      0.4 * (length(regexp_extract_all(text, '[A-Za-z]')) * 1.0 / greatest(length(text), 1))
-    + 0.3 * least(length(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|you|that|it|for)\\b')) * 1.0
-                  / greatest(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END, 1), 1.0)
-    + 0.2 * least(length(text) / 500.0, 1.0)
-    + 0.1 * (1 - length(regexp_extract_all(text, '[^\\sA-Za-z0-9]')) * 1.0 / greatest(length(text), 1))
-"""
 
 
 @register(
@@ -2086,7 +2073,7 @@ def weighted_sample_topk(spark, sf_dir):
            count(*) AS n_docs,
            round(avg(CASE WHEN length(trim(text)) = 0 THEN 0
                           ELSE len(string_split_regex(trim(text), '\\s+')) END), 4) AS avg_tokens,
-           round(avg(CAST(round(round({_QUALITY_SQL}, 6) * 1000000) AS BIGINT)) / 1000000, 4) AS avg_quality,
+           round(avg(CAST(round(round({text.QUALITY_SQL}, 6) * 1000000) AS BIGINT)) / 1000000, 4) AS avg_quality,
            CAST(count(*) - count(DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))) AS BIGINT) AS n_exact_dups
     FROM documents GROUP BY source ORDER BY source
     """,
@@ -3078,8 +3065,8 @@ def embed_pq_topk(spark, sf_dir):
     """Product-Quantization ANN (operators/similarity.py pq_encode/pq_topk):
     8 subspaces x 16 sample-codebook centroids -> 4-byte codes (128x
     lighter than the float column), asymmetric-distance top-10 via an m x k
-    LUT of plan literals — the cheapest candidate generator in the ANN
-    family (exact -> LSH -> IVF -> int8 -> PQ).  The oracle is an
+    LUT in the Arrow scan kernel's closure — the cheapest candidate
+    generator in the ANN family (exact -> LSH -> IVF -> int8 -> PQ).  The oracle is an
     algorithm twin: same literal sample codebooks, same rounded ascending-
     dim squared-distance fold for encode AND LUT, same lowest-index argmin
     tie-break — a green row certifies encoding, table build, and the ADC
@@ -3223,8 +3210,8 @@ def embed_quantized_topk(spark, sf_dir):
 def stream_ivf_ingest_oracle(spark, sf_dir):
     """Streaming IVF index ingest, batch-equality proven: embeddings
     replayed as a file stream through the stateless max-cosine list
-    assignment (centroid matrix as plan literals — zero state, no
-    watermark, no shuffle) into the exactly-once sink; committed
+    assignment (centroid matrix in the Arrow kernel's closure — zero
+    state, no watermark, no shuffle) into the exactly-once sink; committed
     (vec_id, list_id) must equal the batch cross-join argmax twin.  This is
     the write path that keeps the IVF ANN index fresh at ingest
     (streaming/engine.py:assign_ivf + operators/similarity.py:ivf_assign)."""
@@ -5313,15 +5300,6 @@ def dedup_clusters(spark, sf_dir):
     return dedupe.keep_list(dedupe.connected_components(pairs)).orderBy("node")
 
 
-_QUALITY_SQL = """
-    round(0.4 * (length(regexp_extract_all(text, '[A-Za-z]')) * 1.0 / greatest(length(text), 1))
-        + 0.3 * least(length(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|you|that|it|for)\\b')) * 1.0
-                      / greatest(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END, 1), 1.0)
-        + 0.2 * least(length(text) / 500.0, 1.0)
-        + 0.1 * (1 - length(regexp_extract_all(text, '[^\\sA-Za-z0-9]')) * 1.0 / greatest(length(text), 1)), 6)
-"""
-
-
 @register(
     "dedup_keep_best",
     f"""
@@ -5338,9 +5316,9 @@ _QUALITY_SQL = """
     ),
     comp AS (SELECT node, min(lab) AS component FROM r GROUP BY node),
     scored AS (
-      SELECT c.node, c.component, {_QUALITY_SQL} AS q,
+      SELECT c.node, c.component, round({text.QUALITY_SQL}, 6) AS q,
              row_number() OVER (PARTITION BY c.component
-                                ORDER BY {_QUALITY_SQL} DESC, c.node) AS rn
+                                ORDER BY round({text.QUALITY_SQL}, 6) DESC, c.node) AS rn
       FROM comp c JOIN documents d ON d.doc_id = c.node
     )
     SELECT node, component, round(q, 6) AS q, rn = 1 AS keep
@@ -5366,7 +5344,7 @@ def dedup_keep_best(spark, sf_dir):
     WITH RECURSIVE
     f AS (
       SELECT doc_id, text, source,
-             {_QUALITY_SQL} AS q,
+             round({text.QUALITY_SQL}, 6) AS q,
              {_LANG_CASE_SQL} AS lang_pred,
              CASE WHEN length(trim(text)) = 0 THEN 0
                   ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,
@@ -5793,7 +5771,7 @@ def stream_fanout_atomic_oracle(spark, sf_dir):
 
 def _stream_curation_oracle_sql() -> str:
     """Batch twin of the streaming curation chain, built from the SAME rule
-    tables the Spark side uses (text.PII_RULES / _QUALITY_SQL /
+    tables the Spark side uses (text.PII_RULES / text.QUALITY_SQL /
     _PII_RAW_SQL) so neither engine can drift from the other."""
     counts = ",\n           ".join(
         f"CAST(sum(length(regexp_extract_all(raw, '{pat}'))) AS BIGINT) AS {alias}"
@@ -5805,7 +5783,7 @@ def _stream_curation_oracle_sql() -> str:
              time_bucket(INTERVAL '1 hour',
                          to_timestamp(1704067200 + doc_id)::TIMESTAMP) AS ws,
              {_PII_RAW_SQL} AS raw,
-             round({_QUALITY_SQL}, 6) AS q
+             round({text.QUALITY_SQL}, 6) AS q
       FROM documents WHERE lang = 'en'
     )
     SELECT ws, source, count(*) AS n_docs, round(avg(q), 4) AS avg_q,

@@ -773,9 +773,9 @@ class StreamingPipeline:
         """Streaming IVF index ingest: assign each arriving embedding to its
         max-cosine inverted list (``operators.similarity.ivf_assign``) — the
         write path that keeps the ANN index fresh as vectors stream in.
-        Pure Column algebra: the centroid matrix rides as plan literals, so
-        this is a stateless narrow map with ZERO state at any throughput;
-        pair it with a ``list_id``-partitioned sink so batch-side
+        The Arrow assignment kernel carries the centroid matrix in its
+        closure, so this is a stateless narrow map with ZERO state at any
+        throughput; pair it with a ``list_id``-partitioned sink so batch-side
         ``ivf_topk`` probes prune partitions."""
         from ..operators.similarity import ivf_assign
 
@@ -1014,6 +1014,10 @@ def await_drained(
     last data batch.  Deterministic drain: if the caller knows the total input
     rows, wait until the query has consumed them all; then wait until a
     no-data flush batch has run and the batch id stops moving.
+
+    ``expected_input_rows`` counts the rows the source scans actually read:
+    a filter pushed into a parquet scan can skip whole files.  Raises
+    ``TimeoutError`` if the query has not drained by ``timeout_sec``.
     """
     import time
 
@@ -1024,12 +1028,21 @@ def await_drained(
 
     query.processAllAvailable()
     if expected_input_rows is not None:
-        while consumed() < expected_input_rows and time.monotonic() < deadline:
+        while consumed() < expected_input_rows:
+            if time.monotonic() >= deadline:
+                raise TimeoutError(
+                    f"await_drained: consumed {consumed()} of {expected_input_rows} "
+                    f"expected input rows within {timeout_sec}s"
+                )
             time.sleep(poll_sec)
             query.processAllAvailable()
 
     stable, last, seen_flush = 0, -2, False
-    while time.monotonic() < deadline:
+    while True:
+        if time.monotonic() >= deadline:
+            raise TimeoutError(
+                f"await_drained: batch id still moving or no flush batch after {timeout_sec}s"
+            )
         p = query.lastProgress
         cur = p["batchId"] if p else -1
         if p and p["numInputRows"] == 0:

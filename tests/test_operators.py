@@ -2115,33 +2115,84 @@ def test_ann_ladder_recall_at_10(spark, sf_dir):
     assert r_ivfpq >= 0.4, r_ivfpq
 
 
-def test_pq_udf_and_column_paths_agree_bitwise(spark, sf_dir):
-    """The Arrow encode (scale default) and the plan-literal Column encode
-    must assign identical codes on the full test corpus — the empirical
-    guard for the documented rounding-mode caveat (numpy half-even vs
-    Spark half-up at exact 0.5e-6 boundaries)."""
-    import numpy as np
+@pytest.fixture(scope="module")
+def kernel_refs(spark, sf_dir):
+    """The embeddings table, the registry's sampled quantizers (centroid j
+    and PQ codebook row j are the embedding of vec_id 31·j, j < 16) and a
+    DuckDB connection over the same parquet — the inputs of the per-row
+    differentials between each Arrow vector kernel and its SQL twin."""
+    import duckdb
 
-    from pipeflow_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     rows = (
         emb.filter((F.col("vec_id") % 31 == 0) & (F.col("vec_id") < 496))
-        .orderBy("vec_id").collect()
+        .orderBy("vec_id").select("embedding").collect()
     )
-    sample = np.asarray([[float(x) for x in r["embedding"]] for r in rows])
-    books = sample.reshape(16, 8, 8).transpose(1, 0, 2)
-    a = {r.vec_id: tuple(r.codes) for r in
-         similarity.pq_encode(emb, books, method="udf").select("vec_id", "codes").collect()}
-    b = {r.vec_id: tuple(r.codes) for r in
-         similarity.pq_encode(emb, books, method="column").select("vec_id", "codes").collect()}
-    assert a == b
+    sample = np.asarray([[float(x) for x in r[0]] for r in rows])
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    yield emb, [list(c) for c in sample], sample.reshape(16, 8, 8).transpose(1, 0, 2), con
+    con.close()
+
+
+def _oracle(name: str) -> str:
+    from pipeflow_spark.queries import QUERIES
+
+    return QUERIES[name][1]
+
+
+def test_lsh_buckets_match_duckdb_per_row(kernel_refs):
+    emb, _, _, con = kernel_refs
+    got = {r.vec_id: r.bucket for r in
+           similarity.build_lsh_buckets(emb, n_planes=12, dim=64)
+           .select("vec_id", "bucket").collect()}
+    want = dict(con.sql(
+        f"SELECT vec_id, {similarity.bucket_sql('embedding::DOUBLE[]', 64, 12)} FROM embeddings"
+    ).fetchall())
+    assert want and got == want
+
+
+def test_ivf_assign_matches_duckdb_per_row(kernel_refs):
+    """``stream_ivf_ingest_oracle``'s SQL is the cross-join argmax of the
+    rounded cosine over the same sampled centroids, for every vector."""
+    emb, cents, _, con = kernel_refs
+    got = {r.vec_id: r.list_id for r in
+           similarity.ivf_assign(emb, cents).select("vec_id", "list_id").collect()}
+    want = dict(con.sql(_oracle("stream_ivf_ingest_oracle")).fetchall())
+    assert want and got == want
+
+
+def test_pq_encode_matches_duckdb_per_row(kernel_refs):
+    """Codes against the ``enc`` CTE of the ``embed_pq_topk`` oracle (the
+    rounded ascending-dim squared distance, lowest-index argmin)."""
+    emb, _, books, con = kernel_refs
+    got = {(r.vec_id, r.j): r.code for r in
+           similarity.pq_encode(emb, books)
+           .select("vec_id", F.posexplode("codes").alias("j", "code")).collect()}
+    sql = _oracle("embed_pq_topk")
+    ctes = sql[: sql.index(",\n    q AS (")]
+    want = {(v, j): c for v, j, c in
+            con.sql(ctes + " SELECT vec_id, j, code FROM enc").fetchall()}
+    assert want and got == want
+
+
+def test_ivfpq_encode_matches_duckdb_per_row(kernel_refs):
+    """``stream_ivfpq_ingest_oracle``'s SQL: coarse assignment, residual
+    subtraction and per-subspace residual codes, for every vector."""
+    emb, cents, books, con = kernel_refs
+    got = {(r.vec_id, r.list_id, r.j, r.code) for r in
+           similarity.ivfpq_encode(emb, cents, books)
+           .select("vec_id", "list_id", F.posexplode("codes").alias("j", "code")).collect()}
+    want = set(con.sql(_oracle("stream_ivfpq_ingest_oracle")).fetchall())
+    assert want and got == want
 
 
 def test_pq_encode_null_and_wrong_length_rows_get_null_codes(spark):
     """A NULL or wrong-length embedding must not crash the Arrow batch —
-    those rows carry NULL codes; valid rows are unaffected.  Same for a
-    NULL/out-of-range list_id in the IVFADC encoder."""
+    those rows carry NULL codes (and list 1 from the IVF/IVFADC kernels);
+    valid rows are unaffected."""
     books = [[[0.0, 0.0], [5.0, 5.0]], [[0.0, 0.0], [-5.0, -5.0]]]
     df = spark.createDataFrame(
         [(1, [0.1, 0.2, 0.1, 0.2]), (2, None), (3, [1.0, 2.0])],
@@ -2151,24 +2202,14 @@ def test_pq_encode_null_and_wrong_length_rows_get_null_codes(spark):
            similarity.pq_encode(df, books).select("vec_id", "codes").collect()}
     assert got[1] == [0, 0] and got[2] is None and got[3] is None
 
-    enc = similarity.ivfpq_encode(
-        spark.createDataFrame(
-            [(1, [0.1, 0.2, 0.1, 0.2]), (2, None)],
-            "vec_id int, embedding array<double>",
-        ),
-        [[0.0, 0.0, 0.0, 0.0]],
-        books,
-    )
-    got2 = {r.vec_id: r.codes for r in enc.select("vec_id", "codes").collect()}
-    assert got2[1] == [0, 0] and got2[2] is None
-
-
-def test_pq_encode_method_validation(spark):
-    import pytest as _pytest
-
-    df = spark.createDataFrame([(1, [0.0, 0.0])], "vec_id int, embedding array<double>")
-    with _pytest.raises(ValueError, match="method must be"):
-        similarity.pq_encode(df, [[[0.0], [1.0]], [[0.0], [1.0]]], method="arrow")
+    # invalid rows land in list 1 (the all-sentinel argmax) with NULL codes;
+    # the valid row is nearer the second centroid
+    cents = [[-1.0, -1.0, -1.0, -1.0], [1.0, 1.0, 1.0, 1.0]]
+    lists = {r.vec_id: r.list_id for r in similarity.ivf_assign(df, cents).collect()}
+    assert lists == {1: 2, 2: 1, 3: 1}
+    enc = similarity.ivfpq_encode(df, cents, books)
+    got2 = {r.vec_id: (r.list_id, r.codes) for r in enc.collect()}
+    assert got2 == {1: (2, [0, 0]), 2: (1, None), 3: (1, None)}
 
 
 def test_prefix_rows_from_transcript_literal_separator(spark):
@@ -2213,6 +2254,12 @@ def test_pq_topk_excludes_null_code_rows(spark):
     ids2 = [r.vec_id for r in top2]
     assert 3 not in ids2 and 4 not in ids2
     assert ids2 == [1, 2]
+
+    # a hand-built codes array with a NULL element is dropped by the scan too
+    hand = spark.createDataFrame(
+        [(1, [0, 0]), (2, [None, 0])], "vec_id int, codes array<int>"
+    )
+    assert [r.vec_id for r in similarity.pq_topk(hand, books, q, topk=3).collect()] == [1]
 
 
 def test_adc_scan_unmatched_list_id_nan_not_garbage(spark):
@@ -2357,127 +2404,6 @@ def test_scd2_enrich_raises_on_attr_collision(spark):
     )
     with _pytest.raises(ValueError, match="collide with"):
         scd.scd2_enrich(facts, dim, "k", "ts")
-
-
-def test_pq_codebooks_grouped_equals_driver(spark, sf_dir):
-    """VERDICT r3 #4: executor-trained codebooks (applyInPandas, one group
-    per subspace) must equal the driver loop bit-for-bit — both paths call
-    the same per-subspace-seeded kernel on the same sample rows."""
-    import numpy as np
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    for m, k in [(8, 8), (4, 16)]:
-        b_driver = similarity.train_pq_codebooks(emb, m=m, k=k, sample=200, iters=5)
-        b_grouped = similarity.train_pq_codebooks(
-            emb, m=m, k=k, sample=200, iters=5, method="grouped"
-        )
-        assert b_driver.shape == b_grouped.shape
-        assert np.array_equal(b_driver, b_grouped), (m, k)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="method must be"):
-        similarity.train_pq_codebooks(emb, method="remote")
-    with _pytest.raises(ValueError, match="at least k"):
-        similarity.train_pq_codebooks(
-            emb.limit(3), m=8, k=16, sample=64, method="grouped"
-        )
-
-
-def test_arrow_kernels_match_column_twins(spark, sf_dir):
-    """r4 perf rework: the Arrow closure kernels (LSH bucketing, IVF
-    assignment, ADC scans, pair-cosine verify) must be bit-identical to the
-    plan-literal Column forms they replaced as defaults."""
-    import numpy as np
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # sign-LSH single-bucket
-    a = {r.vec_id: r.bucket for r in
-         similarity.build_lsh_buckets(emb, n_planes=12, dim=64, method="arrow")
-         .select("vec_id", "bucket").collect()}
-    c = {r.vec_id: r.bucket for r in
-         similarity.build_lsh_buckets(emb, n_planes=12, dim=64, method="column")
-         .select("vec_id", "bucket").collect()}
-    assert a == c
-    # IVF assignment (incl. sentinel rows)
-    C = similarity.train_ivf_centroids(emb, n_lists=8, sample=128, iters=4)
-    cents = [list(map(float, row)) for row in C]
-    bad = spark.createDataFrame(
-        [(900001, None), (900002, [1.0, 2.0])], "vec_id long, embedding array<double>"
-    )
-    both = emb.select("vec_id", "embedding").unionByName(bad)
-    aa = {r.vec_id: r.list_id for r in
-          similarity.ivf_assign(both, cents, method="arrow").collect()}
-    cc = {r.vec_id: r.list_id for r in
-          similarity.ivf_assign(both, cents, method="column").collect()}
-    assert aa == cc and aa[900001] == 1 and aa[900002] == 1
-    # ADC scans
-    books = similarity.train_pq_codebooks(emb, m=8, k=8, sample=128)
-    q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
-    enc = similarity.pq_encode(emb, books)
-    ra = [(r.vec_id, r.adist) for r in
-          similarity.pq_topk(enc, books, q, topk=30, method="arrow").collect()]
-    rc = [(r.vec_id, r.adist) for r in
-          similarity.pq_topk(enc, books, q, topk=30, method="column").collect()]
-    assert ra == rc
-    enc2 = similarity.ivfpq_encode(emb, cents, books)
-    ia = [(r.vec_id, r.adist) for r in
-          similarity.ivfpq_topk(enc2, cents, books, q, topk=30, method="arrow").collect()]
-    ic = [(r.vec_id, r.adist) for r in
-          similarity.ivfpq_topk(enc2, cents, books, q, topk=30, method="column").collect()]
-    assert ia == ic
-    with __import__("pytest").raises(ValueError, match="method must be"):
-        similarity.ivf_assign(emb, cents, method="sql")
-
-
-def test_ivfpq_fused_encode_equals_staged(spark, sf_dir):
-    """r4: the fused one-pass IVFADC encoder (assign + residual codes in a
-    single Arrow round-trip) must equal the staged path bit-for-bit,
-    including the invalid-row semantics (list 1, NULL codes)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    C = similarity.train_ivf_centroids(emb, n_lists=8, sample=128, iters=4)
-    cents = [list(map(float, row)) for row in C]
-    books = similarity.train_pq_codebooks(emb, m=8, k=8, sample=128)
-    bad = spark.createDataFrame(
-        [(900001, None), (900002, [1.0, 2.0])], "vec_id long, embedding array<double>"
-    )
-    both = emb.select("vec_id", "embedding").unionByName(bad)
-    f = {r.vec_id: (r.list_id, r.codes) for r in
-         similarity.ivfpq_encode(both, cents, books, method="fused").collect()}
-    s = {r.vec_id: (r.list_id, r.codes) for r in
-         similarity.ivfpq_encode(both, cents, books, method="staged").collect()}
-    assert f == s
-    assert f[900001] == (1, None) and f[900002] == (1, None)
-    with __import__("pytest").raises(ValueError, match="method must be"):
-        similarity.ivfpq_encode(both, cents, books, method="twostep")
-
-
-def test_pq_column_encode_invalid_rows_whole_null_and_scan_safe(spark):
-    """code-review r4: the column encoder previously emitted an array OF
-    NULL elements for invalid rows — non-null, so it passed the scan's
-    codes-IS-NOT-NULL guard and poisoned the ADC ranking.  Both encode
-    paths must now yield a whole-NULL codes column, and the scans must
-    exclude NULL-element arrays defensively even on hand-built tables."""
-    books = [[[0.0, 0.0], [5.0, 5.0]], [[0.0, 0.0], [-5.0, -5.0]]]
-    df = spark.createDataFrame(
-        [(1, [0.1, 0.2, 0.1, 0.2]), (2, None), (3, [1.0, 2.0])],
-        "vec_id int, embedding array<double>",
-    )
-    got = {r.vec_id: r.codes for r in
-           similarity.pq_encode(df, books, method="column").select("vec_id", "codes").collect()}
-    assert got[1] == [0, 0] and got[2] is None and got[3] is None
-    q = [0.0, 0.0, 5.0, 5.0]
-    for method in ("arrow", "column"):
-        enc = similarity.pq_encode(df, books, method="column")
-        ids = [r.vec_id for r in similarity.pq_topk(enc, books, q, topk=3, method=method).collect()]
-        assert ids == [1], (method, ids)
-    # hand-built table with a NULL-element codes array: scans must drop it
-    hand = spark.createDataFrame(
-        [(1, [0, 0]), (2, [None, 0])], "vec_id int, codes array<int>"
-    )
-    for method in ("arrow", "column"):
-        ids = [r.vec_id for r in similarity.pq_topk(hand, books, q, topk=3, method=method).collect()]
-        assert ids == [1], (method, ids)
 
 
 def test_lm_cross_entropy_hand_math(spark):

@@ -79,28 +79,6 @@ def test_salted_agg_two_phase(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 2
 
 
-def test_no_cartesian_product_anywhere(spark, sf_dir):
-    """Sweep every batch registry query's physical plan: no CartesianProduct
-    and no BroadcastNestedLoopJoin *inner* blow-up may appear — every join in
-    the engine must key on something (equi-join, band/bucket collision,
-    range-bucket rewrite).  At 100 TB a cartesian plan is a non-starter, so
-    this is the scale-hygiene gate for all current and future queries.
-
-    Streaming e2e queries are excluded (building them runs a stream);
-    the cosine/ANN family's one-row query-vector lookup broadcasts a
-    single-row literal and is keyed by bucket, which this still verifies.
-    """
-    skip = {name for name in QUERIES if name.startswith("stream_")}
-    offenders = {}
-    for name, (fn, _sql) in QUERIES.items():
-        if name in skip:
-            continue
-        plan = _plan(fn(spark, sf_dir))
-        if "CartesianProduct" in plan:
-            offenders[name] = "CartesianProduct"
-    assert not offenders, f"cartesian plans: {offenders}"
-
-
 def test_scalar_subquery_decorrelated_broadcast(spark, sf_dir):
     """The correlated-scalar-subquery query must plan as ONE fact scan joined
     to a broadcast threshold table — not a per-row subquery or a shuffled

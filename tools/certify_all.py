@@ -28,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from check_oracles import TABLES, canon, canon_pandas  # noqa: E402
+from check_oracles import TABLES, oracle_problem, oracle_result, spark_result  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -70,11 +70,8 @@ def main() -> None:
         t0 = time.monotonic()
         rec: dict = {"pos": i, "rows": None, "sec": None}
         try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
-            s_pdf = sdf.toPandas()
-            rec["rows"] = len(s_rows)
+            s = spark_result(fn(spark, sf_dir))
+            rec["rows"] = len(s[1])
         except Exception as e:  # noqa: BLE001
             rec.update(status="spark-error", detail=str(e).splitlines()[0][:160])
             results[name] = rec
@@ -87,26 +84,16 @@ def main() -> None:
             print(f"ok?   {name}: rows-only ({rec['rows']} rows)", flush=True)
             continue
         try:
-            rel = con.sql(oracles[name])
-            d_cols, d_rows = rel.columns, rel.fetchall()
-            d_pdf = con.sql(oracles[name]).df()
+            d = oracle_result(con, oracles[name])
         except Exception as e:  # noqa: BLE001
             rec.update(status="duckdb-error", detail=str(e).splitlines()[0][:160])
             results[name] = rec
             print(f"FAIL  {name}: duckdb error: {rec['detail']}", flush=True)
             continue
-        problems = []
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append("schema")
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount {len(s_rows)}!={len(d_rows)}")
-        if not problems and canon(s_rows, s_cols) != canon(d_rows, d_cols):
-            problems.append("values")
-        if not problems and canon_pandas(s_pdf) != canon_pandas(d_pdf):
-            problems.append("values(pandas-normalized)")
+        problem = oracle_problem(s, d)
         rec["sec"] = round(time.monotonic() - t0, 1)
-        if problems:
-            rec.update(status="red", detail=";".join(problems))
+        if problem:
+            rec.update(status="red", detail=problem)
             print(f"FAIL  {name}: {rec['detail']}", flush=True)
         else:
             rec.update(status="green")

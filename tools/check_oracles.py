@@ -76,6 +76,43 @@ def canon_pandas(pdf):
     return sorted(out)
 
 
+def spark_result(sdf):
+    """(columns, rows, pandas frame) of a Spark DataFrame."""
+    return sdf.columns, [tuple(r) for r in sdf.collect()], sdf.toPandas()
+
+
+def oracle_result(con, sql: str):
+    """(columns, rows, pandas frame) of an oracle query, run ONCE: the
+    result is materialized into a temp table and both the fetchall rows and
+    the ``.df()`` frame are read from it."""
+    con.execute(f"CREATE OR REPLACE TEMP TABLE __oracle AS {sql}")
+    try:
+        rel = con.table("__oracle")
+        return rel.columns, rel.fetchall(), con.table("__oracle").df()
+    finally:
+        con.execute("DROP TABLE __oracle")
+
+
+def oracle_problem(spark_res, oracle_res) -> str | None:
+    """Compare a :func:`spark_result` with an :func:`oracle_result`: column
+    names, row count, then values under both normalizations
+    (:func:`canon`, :func:`canon_pandas`).  Returns the first mismatch, or
+    None when they agree."""
+    (s_cols, s_rows, s_pdf), (d_cols, d_rows, d_pdf) = spark_res, oracle_res
+    if sorted(s_cols) != sorted(d_cols):
+        return f"schema {sorted(s_cols)} != {sorted(d_cols)}"
+    if len(s_rows) != len(d_rows):
+        return f"rowcount {len(s_rows)} != {len(d_rows)}"
+    for label, a, b in (
+        ("values", canon(s_rows, s_cols), canon(d_rows, d_cols)),
+        ("pandas-normalized values", canon_pandas(s_pdf), canon_pandas(d_pdf)),
+    ):
+        if a != b:
+            i, x, y = next((i, x, y) for i, (x, y) in enumerate(zip(a, b)) if x != y)
+            return f"{label} differ at sorted-row {i}: spark={x} duck={y}"
+    return None
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -97,48 +134,27 @@ def main():
         ran += 1
         t0 = time.monotonic()
         try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
-            s_pdf = sdf.toPandas()
+            s = spark_result(fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: spark error: {str(e).splitlines()[0][:200]}")
             continue
+        n_rows = len(s[1])
         if name not in oracles:
-            print(f"ok?   {name}: rows-only ({len(s_rows)} rows, {time.monotonic()-t0:.1f}s) [no oracle]")
+            print(f"ok?   {name}: rows-only ({n_rows} rows, {time.monotonic()-t0:.1f}s) [no oracle]")
             continue
         try:
-            rel = con.sql(oracles[name])
-            d_cols, d_rows = rel.columns, rel.fetchall()
-            d_pdf = con.sql(oracles[name]).df()
+            d = oracle_result(con, oracles[name])
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {str(e).splitlines()[0][:200]}")
             continue
-        problems = []
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append(f"schema {sorted(s_cols)} != {sorted(d_cols)}")
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount {len(s_rows)} != {len(d_rows)}")
-        if not problems:
-            cs, cd = canon(s_rows, s_cols), canon(d_rows, d_cols)
-            if cs != cd:
-                diff = next((i, a, b) for i, (a, b) in enumerate(zip(cs, cd)) if a != b)
-                problems.append(f"values differ at sorted-row {diff[0]}: spark={diff[1]} duck={diff[2]}")
-        if not problems:
-            ps, pd_ = canon_pandas(s_pdf), canon_pandas(d_pdf)
-            if ps != pd_:
-                diff = next((i, a, b) for i, (a, b) in enumerate(zip(ps, pd_)) if a != b)
-                problems.append(
-                    f"pandas-normalized values differ at sorted-row {diff[0]}: "
-                    f"spark={diff[1]} duck={diff[2]}"
-                )
-        if problems:
+        problem = oracle_problem(s, d)
+        if problem:
             failures.append(name)
-            print(f"FAIL  {name}: {'; '.join(problems)}")
+            print(f"FAIL  {name}: {problem}")
         else:
-            print(f"PASS  {name} ({len(s_rows)} rows, {time.monotonic()-t0:.1f}s)")
+            print(f"PASS  {name} ({n_rows} rows, {time.monotonic()-t0:.1f}s)")
 
     print(f"\n{ran - len(failures)}/{ran} ok; failures: {failures or 'none'}")
     spark.stop()
