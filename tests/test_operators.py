@@ -23,6 +23,7 @@ from pipeflow_spark.operators import (
     text,
     zorder,
 )
+from pipeflow_spark.queries import QUERIES
 
 
 # -- text ---------------------------------------------------------------------
@@ -2137,12 +2138,6 @@ def kernel_refs(spark, sf_dir):
     con.close()
 
 
-def _oracle(name: str) -> str:
-    from pipeflow_spark.queries import QUERIES
-
-    return QUERIES[name][1]
-
-
 def test_lsh_buckets_match_duckdb_per_row(kernel_refs):
     emb, _, _, con = kernel_refs
     got = {r.vec_id: r.bucket for r in
@@ -2160,7 +2155,7 @@ def test_ivf_assign_matches_duckdb_per_row(kernel_refs):
     emb, cents, _, con = kernel_refs
     got = {r.vec_id: r.list_id for r in
            similarity.ivf_assign(emb, cents).select("vec_id", "list_id").collect()}
-    want = dict(con.sql(_oracle("stream_ivf_ingest_oracle")).fetchall())
+    want = dict(con.sql(QUERIES["stream_ivf_ingest_oracle"][1]).fetchall())
     assert want and got == want
 
 
@@ -2171,7 +2166,7 @@ def test_pq_encode_matches_duckdb_per_row(kernel_refs):
     got = {(r.vec_id, r.j): r.code for r in
            similarity.pq_encode(emb, books)
            .select("vec_id", F.posexplode("codes").alias("j", "code")).collect()}
-    sql = _oracle("embed_pq_topk")
+    sql = QUERIES["embed_pq_topk"][1]
     ctes = sql[: sql.index(",\n    q AS (")]
     want = {(v, j): c for v, j, c in
             con.sql(ctes + " SELECT vec_id, j, code FROM enc").fetchall()}
@@ -2185,7 +2180,7 @@ def test_ivfpq_encode_matches_duckdb_per_row(kernel_refs):
     got = {(r.vec_id, r.list_id, r.j, r.code) for r in
            similarity.ivfpq_encode(emb, cents, books)
            .select("vec_id", "list_id", F.posexplode("codes").alias("j", "code")).collect()}
-    want = set(con.sql(_oracle("stream_ivfpq_ingest_oracle")).fetchall())
+    want = set(con.sql(QUERIES["stream_ivfpq_ingest_oracle"][1]).fetchall())
     assert want and got == want
 
 

@@ -88,7 +88,7 @@ def oracle_result(con, sql: str):
     con.execute(f"CREATE OR REPLACE TEMP TABLE __oracle AS {sql}")
     try:
         rel = con.table("__oracle")
-        return rel.columns, rel.fetchall(), con.table("__oracle").df()
+        return rel.columns, rel.fetchall(), rel.df()
     finally:
         con.execute("DROP TABLE __oracle")
 
