@@ -2250,7 +2250,22 @@ def test_pq_topk_excludes_null_code_rows(spark):
     assert 3 not in ids2 and 4 not in ids2
     assert ids2 == [1, 2]
 
-    # a hand-built codes array with a NULL element is dropped by the scan too
+
+def test_pq_column_encode_invalid_rows_whole_null_and_scan_safe(spark):
+    """An invalid row's codes must be a whole-NULL column, not an array of
+    NULL elements: the latter is non-null, passes the scan's
+    codes-IS-NOT-NULL guard and poisons the ADC ranking.  The scan must also
+    drop NULL-element arrays defensively on hand-built tables."""
+    books = [[[0.0, 0.0], [5.0, 5.0]], [[0.0, 0.0], [-5.0, -5.0]]]
+    df = spark.createDataFrame(
+        [(1, [0.1, 0.2, 0.1, 0.2]), (2, None), (3, [1.0, 2.0])],
+        "vec_id int, embedding array<double>",
+    )
+    enc = similarity.pq_encode(df, books)
+    assert {r.vec_id: r.codes for r in enc.select("vec_id", "codes").collect()} == {
+        1: [0, 0], 2: None, 3: None}
+    q = [0.0, 0.0, 5.0, 5.0]
+    assert [r.vec_id for r in similarity.pq_topk(enc, books, q, topk=3).collect()] == [1]
     hand = spark.createDataFrame(
         [(1, [0, 0]), (2, [None, 0])], "vec_id int, codes array<int>"
     )
