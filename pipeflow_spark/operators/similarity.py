@@ -447,7 +447,6 @@ def _ivf_assign_udf(centroids):
 def ivf_assign(
     embeddings: DataFrame,
     centroids,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Add a 1-based ``list_id`` column: the max-cosine centroid (ties →
@@ -504,9 +503,7 @@ def ivf_topk(
     )
 
 
-def quantize_embeddings(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Symmetric int8 quantization: per-vector scale ``m = max(|x_i|)``,
     ``q_i = trunc(x_i · 127 / m)`` ∈ [−127, 127], stored as
     ``array<tinyint>`` next to the float vector.
@@ -617,7 +614,7 @@ def semantic_dup_pairs(
     # ANSI mode), so results stay bit-identical to the oracle twin — but the
     # two self-dots run per VECTOR instead of per pair (HOF dots per pair
     # 3 → 1; measured ~2.5× at sf0.1).
-    a = ivf_assign(embeddings, centroids, id_col=id_col, vec_col=vec_col).select(
+    a = ivf_assign(embeddings, centroids, vec_col=vec_col).select(
         "list_id",
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -900,7 +897,6 @@ def _check_codes_fingerprint(encoded: DataFrame, expected: dict[str, str]) -> No
 def pq_encode(
     embeddings: DataFrame,
     codebooks,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Add ``codes``: per subspace, the 0-based index of the nearest
@@ -1038,7 +1034,6 @@ def ivfpq_encode(
     embeddings: DataFrame,
     centroids,
     codebooks,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVFADC encoding (Jégou et al. TPAMI'11 §IV): assign each vector to

@@ -767,9 +767,7 @@ class StreamingPipeline:
             out = out.filter(F.col("xent") <= max_xent)
         return self._wrap(out)
 
-    def assign_ivf(
-        self, centroids, id_col: str = "vec_id", vec_col: str = "embedding"
-    ) -> "StreamingPipeline":
+    def assign_ivf(self, centroids, vec_col: str = "embedding") -> "StreamingPipeline":
         """Streaming IVF index ingest: assign each arriving embedding to its
         max-cosine inverted list (``operators.similarity.ivf_assign``) — the
         write path that keeps the ANN index fresh as vectors stream in.
@@ -779,7 +777,7 @@ class StreamingPipeline:
         ``ivf_topk`` probes prune partitions."""
         from ..operators.similarity import ivf_assign
 
-        return self._wrap(ivf_assign(self._df, centroids, id_col=id_col, vec_col=vec_col))
+        return self._wrap(ivf_assign(self._df, centroids, vec_col=vec_col))
 
     # -- arbitrary stateful CEP ---------------------------------------------------------------
     def stateful_per_key(

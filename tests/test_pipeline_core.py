@@ -118,6 +118,32 @@ def test_spread_file_scan_avoids_rdd(spark, sf_dir, monkeypatch):
     assert session.spread(df).rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
 
 
+def test_spread_plans_without_running_jobs(spark):
+    """spread() sizes a plan that is not a file scan from its physical plan
+    alone.  Under AQE ``df.rdd`` would run the plan's shuffle and broadcast
+    stages while the chain is still being built, and the real action would
+    run them again.  The estimate matches the width AQE really runs at."""
+    from pipeflow_spark import session
+
+    sc = spark.sparkContext
+    narrow = spark.range(200).coalesce(1).localCheckpoint()
+    anti = narrow.join(spark.range(0, 200, 3).localCheckpoint(), "id", "left_anti")
+    agg = narrow.groupBy((F.col("id") % 7).alias("k")).count()  # one 8-way shuffle
+    for df in (anti, agg):
+        sc.setJobGroup("spread-probe", "spread")
+        try:
+            out = session.spread(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup("spread-probe")) == []
+        assert session._planned_width(df) == df.rdd.getNumPartitions() == 1
+        assert out is not df  # one partition < default parallelism: spread
+    for wide in (spark.range(200).localCheckpoint(),  # one partition per core
+                 spark.createDataFrame([(i,) for i in range(20)], "id long")):
+        assert session._planned_width(wide) == wide.rdd.getNumPartitions()
+        assert session.spread(wide) is wide
+
+
 def test_fluent_curation_chain(spark):
     """The reference-style fluent chain over the curation bridges:
     quality gate -> PII redact (+audit) -> exact dedupe -> near dedupe ->

@@ -68,3 +68,19 @@ def test_rotation_set_is_nonempty_and_sane():
 def test_rotated_out_query_still_matches_oracle(name, spark, duck):
     fn, sql = QUERIES[name]
     assert oracle_problem(spark_result(fn(spark, SF_DIR)), oracle_result(duck, sql)) is None
+
+
+def test_spark_result_runs_the_plan_once(spark):
+    """spark_result reads the rows and the pandas frame from ONE execution
+    of the plan: a mapInPandas stage counting its rows with an accumulator
+    sees each row once, not once for collect() and again for toPandas()."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    cols, rows, pdf = spark_result(spark.range(20).mapInPandas(count, "id long"))
+    assert cols == ["id"] and len(rows) == len(pdf) == 20
+    assert seen.value == 20

@@ -77,8 +77,11 @@ def canon_pandas(pdf):
 
 
 def spark_result(sdf):
-    """(columns, rows, pandas frame) of a Spark DataFrame."""
-    return sdf.columns, [tuple(r) for r in sdf.collect()], sdf.toPandas()
+    """(columns, rows, pandas frame) of a Spark DataFrame, run ONCE: the
+    plan is materialized with ``localCheckpoint`` and both the collected
+    rows and the ``toPandas()`` frame are read from the checkpoint."""
+    cp = sdf.localCheckpoint()
+    return cp.columns, [tuple(r) for r in cp.collect()], cp.toPandas()
 
 
 def oracle_result(con, sql: str):
