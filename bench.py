@@ -107,22 +107,14 @@ def bench_stream(spark, trials: int | None = None) -> dict[str, float]:
     one of the host's multi-minute steal windows.  The arrival files are
     synthesized once; each trial replays them through a FRESH checkpoint and
     sink, so no trial rides another's state."""
-    from pyspark.sql import functions as F
-
-    from pipeflow_spark.streaming import ExactlyOnceSink, StreamingPipeline
-    from pipeflow_spark.streaming.transcripts import (
-        synthesize_transcripts,
-        write_arrival_files,
-        write_sentinel_file,
-    )
-    import datetime as dt
+    from perfbench import chain
+    from pipeflow_spark.streaming import ExactlyOnceSink
 
     trials = trials or int(os.environ.get("SPARK_GRAFT_STREAM_TRIALS", "2"))
     work = tempfile.mkdtemp(prefix="pipeflow_bench_")
     src = os.path.join(work, "src")
-    pdf = synthesize_transcripts(n_convs=30000, n_files=8, seed=42, late_frac=0.02)
-    write_arrival_files(pdf, src)
-    write_sentinel_file(src, dt.datetime(2026, 1, 1))
+    pdf = chain.synthesize(42, n_convs=30000, n_files=8)
+    chain.write_files(pdf, src)
     n_turns = len(pdf)
 
     # stateful-op state partitions are sized independently of core count
@@ -135,21 +127,7 @@ def bench_stream(spark, trials: int | None = None) -> dict[str, float]:
         for trial in range(trials):
             root = os.path.join(work, f"sink{trial}")
             ckpt = os.path.join(work, f"ckpt{trial}")
-            sp = (
-                StreamingPipeline.read_transcripts(spark, src, max_files_per_trigger=2)
-                .with_watermark("ts", "10 minutes")
-                # prune to the aggregated columns before the stateful shuffle
-                .select("conv_id", "turn_idx", "ts")
-                .dedupe_within_watermark(["conv_id", "turn_idx"])
-                .tumbling_agg(
-                    "ts",
-                    "5 minutes",
-                    ["conv_id"],
-                    F.count("*").alias("n"),
-                    F.max("turn_idx").alias("max_turn"),
-                )
-                .select(F.col("w.start").alias("ws"), "conv_id", "n", "max_turn")
-            )
+            sp = chain.north_star(spark, src, max_files_per_trigger=2)
             sink = ExactlyOnceSink(root)
             t0 = time.monotonic()
             q = sp.start_exactly_once(sink, ckpt, output_mode="append")
@@ -174,40 +152,6 @@ def bench_stream(spark, trials: int | None = None) -> dict[str, float]:
     return best
 
 
-def wait_for_quiet(gauge, lo: float, hi: float, budget_sec: int, sleep_sec: int):
-    """Bounded wait for a quiet host window before measuring anything.
-
-    The r2 verdict's one process failure was capturing the official bench
-    under a 0.58 gauge (≈25 % CPU steal), which made two apparent
-    regressions unusable as evidence.  This gate makes the per-round capture
-    self-verifying: double-probe (two consecutive probes 30 s apart must both
-    land in [lo, hi] — a single probe passes sub-minute oscillations, and
-    readings above ``hi`` mean the probe's own solo phase was throttled),
-    with ≥``sleep_sec`` refill sleeps between failed attempts because the
-    16-core probe itself drains the host's burst credits
-    (tools/quiet_capture.py documents the protocol).  If no window opens
-    within ``budget_sec`` the bench runs anyway — the embedded before/after
-    gauges then flag the numbers as captured-under-steal rather than
-    silently understating the engine.
-
-    Returns the list of probe readings (the last 1–2 are the passing pair).
-    """
-    probes: list[float] = []
-    deadline = time.monotonic() + budget_sec
-    while True:
-        g1 = gauge()
-        probes.append(g1)
-        if lo <= g1 <= hi:
-            time.sleep(30)
-            g2 = gauge()
-            probes.append(g2)
-            if lo <= g2 <= hi:
-                return probes
-        if time.monotonic() + sleep_sec >= deadline:
-            return probes
-        time.sleep(sleep_sec)
-
-
 def main() -> None:
     from pipeflow_spark.session import get_spark
 
@@ -215,17 +159,13 @@ def main() -> None:
     # ≤0.9 = a hypervisor steal window was open and every number understates
     # the engine (identical runs have measured 4–10× apart on this host).
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-    from cpu_gauge import gauge
+    from cpu_gauge import gauge, wait_for_quiet
 
-    wait_probes = wait_for_quiet(
-        gauge,
-        lo=float(os.environ.get("SPARK_GRAFT_QUIET_LO", "0.93")),
-        hi=float(os.environ.get("SPARK_GRAFT_QUIET_HI", "1.10")),
-        # bounded at 15 min: long enough that a steal window usually passes,
-        # short enough that a driver-side timeout can't swallow the capture
-        budget_sec=int(os.environ.get("SPARK_GRAFT_QUIET_BUDGET", "900")),
-        sleep_sec=int(os.environ.get("SPARK_GRAFT_QUIET_SLEEP", "240")),
-    )
+    # A capture under a 0.58 gauge (≈25 % CPU steal) once made two apparent
+    # regressions unusable as evidence.  If no quiet window opens within the
+    # budget the bench runs anyway: the embedded before/after gauges then
+    # flag the numbers as captured under steal.
+    _, wait_probes = wait_for_quiet()
     gauge_before = gauge()
     spark = get_spark("pipeflow_bench", cpus=CPUS, shuffle_partitions=CPUS)
     # warm the JVM/codegen path so timings measure the engine, not startup

@@ -169,38 +169,6 @@ def _byte_string_as_bytes(s: str) -> int:
         return 134217728  # Spark's default 128m
 
 
-def _file_split_estimate(df) -> int | None:
-    """Estimate the scan partition count of a file-backed DataFrame from its
-    file index — WITHOUT converting the plan to an RDD (``df.rdd`` forces
-    full analysis + physical planning per call and bypasses AQE's view; on a
-    wide multi-stage plan that's real driver latency for a number the file
-    listing already knows).  Returns None when the estimate can't be made
-    safely (non-file source, or remote files we can't stat cheaply)."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    raw = df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    mpb = _byte_string_as_bytes(str(raw))
-    splits = 0
-    for uri in files:
-        if not uri.startswith("file:"):
-            # remote store (s3a/abfs/…): per-file stats aren't free here;
-            # callers on a real cluster pass current_partitions instead
-            return None
-        path = uri[len("file:"):]
-        while path.startswith("//"):
-            path = path[1:]
-        try:
-            size = os.path.getsize(path)
-        except OSError:
-            return None
-        splits += max(1, -(-size // mpb))
-    return splits
-
-
 def _coalesced_width(spark: SparkSession, n: int, size: int) -> int:
     """Partitions AQE leaves of an ``n``-way shuffle of ~``size`` bytes.
 
@@ -227,80 +195,76 @@ def _coalesced_width(spark: SparkSession, n: int, size: int) -> int:
 def _planned_width(df) -> int:
     """Partition count of ``df``, estimated from its physical plan alone.
 
-    Leaves report their own width: an RDD scan its RDD's partitions, local
-    rows one slice per row up to the default parallelism, a file scan what
-    its file index already listed (file count and total bytes, so a remote
-    store costs no extra call).  A shuffle reports what AQE will coalesce it
-    to for the Catalyst estimate of the whole plan's output (estimates
-    inside the plan can be far off: the checkpointed output of the
-    iterative connected-components loop claims ~10^40 bytes).  A broadcast
-    build side adds no partitions; a union sums its children and every
-    other operator keeps its widest child's."""
+    Each operator reports a width and the bytes of the scans beneath it.  A
+    file scan reports its file index's file count and total bytes (split by
+    ``maxPartitionBytes``; a remote store costs no extra call), a cached
+    table its partitions and in-memory size, an RDD scan its RDD's
+    partitions and local rows one slice per row up to the default
+    parallelism.  RDD and local scans have no byte count, so they stand in
+    with the Catalyst estimate of the whole plan (their own estimates can be
+    far off: the checkpointed output of the iterative connected-components
+    loop claims ~10^40 bytes).  A shuffle reports what AQE will coalesce
+    its scans' bytes to; the whole plan's estimate would not do there,
+    because the optimizer can expect a join or aggregate to grow the data
+    several times over.  A broadcast build side adds no partitions; a union
+    sums its children's widths and every other operator keeps its widest
+    child's."""
     spark = df.sparkSession
     qe = df._jdf.queryExecution()
-    size = int(qe.optimizedPlan().stats().sizeInBytes())
+    whole = int(qe.optimizedPlan().stats().sizeInBytes())
 
-    def width(plan) -> int:
+    def walk(plan) -> tuple[int, int]:
         name = plan.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
-            return width(plan.initialPlan())
+            return walk(plan.initialPlan())
+        kids = [walk(plan.children().apply(i)) for i in range(plan.children().size())]
+        size = sum(b for _, b in kids)
         if name == "BroadcastExchangeExec":
-            return 0
+            return 0, size
         if name == "ShuffleExchangeExec":
             n = plan.outputPartitioning().numPartitions()
             if plan.shuffleOrigin().toString() == "REPARTITION_BY_NUM":
-                return n  # an explicit repartition(n): AQE leaves it at n
-            return _coalesced_width(spark, n, size)
-        kids = plan.children()
-        if kids.size() == 0:
-            if name == "RDDScanExec":
-                return plan.rdd().getNumPartitions()
-            if name == "LocalTableScanExec":  # Spark's numParallelism rule
-                return min(max(plan.rows().size(), 1), spark.sparkContext.defaultParallelism)
-            n = plan.outputPartitioning().numPartitions()
-            if n == 0 and name == "FileSourceScanExec":
-                loc = plan.relation().location()
-                mpb = _byte_string_as_bytes(
-                    str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")))
-                n = max(len(loc.inputFiles()), -(-int(loc.sizeInBytes()) // mpb))
-            return n or 1
-        widths = [width(kids.apply(i)) for i in range(kids.size())]
-        return sum(widths) if name == "UnionExec" else max(widths)
+                return n, size  # an explicit repartition(n): AQE leaves it at n
+            return _coalesced_width(spark, n, size), size
+        if kids:
+            width = sum(w for w, _ in kids) if name == "UnionExec" else max(w for w, _ in kids)
+            return width, size
+        n = plan.outputPartitioning().numPartitions()
+        if name == "FileSourceScanExec":
+            loc = plan.relation().location()
+            size = int(loc.sizeInBytes())
+            mpb = _byte_string_as_bytes(
+                str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")))
+            return n or max(len(loc.inputFiles()), -(-size // mpb), 1), size
+        if name == "InMemoryTableScanExec":
+            size = int(plan.relation().computeStats().sizeInBytes())
+            return n or 1, size
+        if name == "RDDScanExec":
+            return plan.rdd().getNumPartitions(), whole
+        if name == "LocalTableScanExec":  # Spark's numParallelism rule
+            return min(max(plan.rows().size(), 1), spark.sparkContext.defaultParallelism), whole
+        return n or 1, whole
 
-    return width(qe.executedPlan())
+    return walk(qe.executedPlan())[0]
 
 
-def spread(df, min_partitions: int | None = None, current_partitions: int | None = None):
-    """Round-robin repartition a DataFrame **only if** its scan has fewer
-    partitions than the cluster's parallelism.
+def spread(df):
+    """Round-robin repartition a DataFrame to the cluster's parallelism
+    **only if** its plan runs narrower than that.
 
     A small parquet file (one row group) scans as a single partition, which
     serializes every expression-heavy stage built on it (n-gram explode,
-    signature UDFs).  At real scale the scan already has thousands of
-    partitions and this is a no-op — the guard keeps it from *shrinking* a
-    large scan, so it is safe to apply unconditionally in operators that fan
-    out work per row.
+    signature UDFs).  At real scale the plan is already wider and this is a
+    no-op: the guard keeps it from *shrinking* a wide plan, so it is safe to
+    apply unconditionally in operators that fan out work per row.
 
-    The current width comes from (in order): the caller's
-    ``current_partitions`` hint; the file index (#files, split by
-    ``maxPartitionBytes``) for local file scans; and otherwise the physical
-    plan (:func:`_planned_width`).  Nothing here runs a Spark job: under AQE
-    ``df.rdd`` would execute the plan's shuffle and broadcast stages while
-    the chain is still being built, and the real action would run them
-    again.
+    The width is :func:`_planned_width`'s estimate from the physical plan.
+    Nothing here runs a Spark job: under AQE ``df.rdd`` would execute the
+    plan's shuffle and broadcast stages while the chain is still being
+    built, and the real action would run them again.
     """
-    want = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    cur = current_partitions
-    if cur is None:
-        try:
-            if len(df.inputFiles()) >= want:
-                return df  # ≥1 scan task per file: already wide enough
-        except Exception:
-            pass
-        cur = _file_split_estimate(df)
-    if cur is None:
-        cur = _planned_width(df)
-    return df.repartition(want) if cur < want else df
+    want = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(want) if _planned_width(df) < want else df
 
 
 _SHIPPED: set[int] = set()

@@ -97,8 +97,8 @@ def test_set_ops(persons, spark):
 
 
 def test_spread_file_scan_avoids_rdd(spark, sf_dir, monkeypatch):
-    """spread() on a file-backed scan must size itself from the file index,
-    never from df.rdd (which forces full physical planning per call)."""
+    """spread() on a file-backed scan sizes it from the file index in its
+    physical plan, never from df.rdd (which runs the plan's stages)."""
     from pyspark.sql import DataFrame
 
     from pipeflow_spark import session
@@ -111,9 +111,6 @@ def test_spread_file_scan_avoids_rdd(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(DataFrame, "rdd", property(_boom))
     out = session.spread(df)  # small file → repartition expected, no .rdd
     assert "Repartition" in out._jdf.queryExecution().logical().toString()
-    # explicit caller hint short-circuits everything
-    wide = session.spread(df, current_partitions=10_000)
-    assert wide is df
     monkeypatch.undo()
     assert session.spread(df).rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
 
@@ -129,7 +126,10 @@ def test_spread_plans_without_running_jobs(spark):
     narrow = spark.range(200).coalesce(1).localCheckpoint()
     anti = narrow.join(spark.range(0, 200, 3).localCheckpoint(), "id", "left_anti")
     agg = narrow.groupBy((F.col("id") % 7).alias("k")).count()  # one 8-way shuffle
-    for df in (anti, agg):
+    cached = spark.range(200).persist()
+    cached.count()
+    cached_agg = cached.groupBy((F.col("id") % 7).alias("k")).count()
+    for df in (anti, agg, cached_agg):
         sc.setJobGroup("spread-probe", "spread")
         try:
             out = session.spread(df)
@@ -142,6 +142,23 @@ def test_spread_plans_without_running_jobs(spark):
                  spark.createDataFrame([(i,) for i in range(20)], "id long")):
         assert session._planned_width(wide) == wide.rdd.getNumPartitions()
         assert session.spread(wide) is wide
+    cached.unpersist()
+
+
+def test_spread_ignores_broadcast_side_files(spark, tmp_path):
+    """A file that is only a broadcast build side adds no width: a
+    checkpoint twice the default parallelism wide, joined to a broadcast
+    one-file parquet, is left as it is (sizing it from the plan's input
+    files alone read it as one split and repartitioned it down)."""
+    from pipeflow_spark import session
+
+    want = spark.sparkContext.defaultParallelism
+    small = str(tmp_path / "small.parquet")
+    spark.range(10).coalesce(1).write.parquet(small)
+    wide = spark.range(0, 1000, 1, 2 * want).localCheckpoint()
+    df = wide.join(F.broadcast(spark.read.parquet(small)), "id")
+    assert session._planned_width(df) == df.rdd.getNumPartitions() == 2 * want
+    assert session.spread(df) is df
 
 
 def test_fluent_curation_chain(spark):

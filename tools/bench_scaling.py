@@ -51,6 +51,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from perfbench import chain  # noqa: E402
+
 N_CONVS = int(os.environ.get("SPARK_GRAFT_SCALE_CONVS", "150000"))
 N_FILES = 4
 TRIALS = int(os.environ.get("SPARK_GRAFT_TRIALS", "3"))
@@ -60,18 +62,9 @@ MASTER_URL = "spark://127.0.0.1:7077"
 
 
 def build_input(work: str) -> tuple[str, int]:
-    import datetime as dt
-
-    from pipeflow_spark.streaming.transcripts import (
-        synthesize_transcripts,
-        write_arrival_files,
-        write_sentinel_file,
-    )
-
     src = os.path.join(work, "src")
-    pdf = synthesize_transcripts(n_convs=N_CONVS, n_files=N_FILES, seed=42, late_frac=0.02)
-    write_arrival_files(pdf, src)
-    write_sentinel_file(src, dt.datetime(2026, 1, 1))
+    pdf = chain.synthesize(42, n_convs=N_CONVS, n_files=N_FILES)
+    chain.write_files(pdf, src)
     return src, len(pdf)
 
 
@@ -124,18 +117,10 @@ def run_one(cpus: int, src: str, n_turns: int) -> dict:
     # generated classes are compiled and cached on driver+executors before the
     # timed run — steady-state throughput is the metric (a 10^12-turn stream
     # amortizes JIT to zero), not cold-start.
-    import datetime as dt
-
-    from pipeflow_spark.streaming.transcripts import (
-        synthesize_transcripts,
-        write_arrival_files,
-        write_sentinel_file,
-    )
+    from pipeflow_spark.streaming.transcripts import synthesize_transcripts
 
     wsrc = os.path.join(work, "warm_src")
-    wpdf = synthesize_transcripts(n_convs=200, n_files=2, seed=7, late_frac=0.0)
-    write_arrival_files(wpdf, wsrc)
-    write_sentinel_file(wsrc, dt.datetime(2026, 1, 1))
+    chain.write_files(synthesize_transcripts(n_convs=200, n_files=2, seed=7, late_frac=0.0), wsrc)
     wsink = ExactlyOnceSink(os.path.join(work, "warm_sink"))
     wq = _build_chain(spark, wsrc, job).start_exactly_once(
         wsink, os.path.join(work, "warm_ckpt"), output_mode="append"

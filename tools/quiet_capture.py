@@ -7,13 +7,12 @@ single `tools/cpu_gauge.py` probe is itself noisy — a reading > 1.0 usually
 means the probe's *solo* phase was throttled, not that the host is fast.
 Protocol learned over rounds 2–3:
 
-1. **Double-probe gate**: two consecutive probes 30 s apart must BOTH land
-   in [lo, hi] (default [0.93, 1.10]) before launching.  Filters sub-minute
-   oscillation that a single probe passes.
-2. **Refill sleeps**: the 16-core probe and the measured run both drain the
-   host's burst credits; sleep ≥ 4 min after a failed probe and ≥ 6 min
-   after a failed run so the next probe measures the host, not the probe's
-   own exhaust.
+1. **Double-probe gate** (``cpu_gauge.wait_for_quiet``, shared with
+   bench.py): two consecutive probes 30 s apart must BOTH land in the quiet
+   bounds before launching, with refill sleeps between failed probes.
+2. **Refill sleeps**: the measured run drains the host's burst credits too;
+   sleep ≥ 6 min after a failed attempt so the next probe measures the
+   host, not the run's own exhaust.
 3. **Post-run verdict**: the captured JSON must embed its own before/after
    gauges (bench.py does); accept only if both ≥ accept threshold (0.9),
    else keep hunting.  Every rejected attempt is kept on disk — publish the
@@ -21,7 +20,8 @@ Protocol learned over rounds 2–3:
 
 Usage:
     python tools/quiet_capture.py --out /tmp/final.json -- python bench.py
-Env: QC_LO / QC_HI / QC_ACCEPT / QC_ATTEMPTS / QC_PROBE_SLEEP / QC_RUN_SLEEP.
+Env: QC_ACCEPT / QC_ATTEMPTS / QC_RUN_SLEEP, plus the gate's
+SPARK_GRAFT_QUIET_* (see tools/cpu_gauge.py).
 """
 
 from __future__ import annotations
@@ -34,13 +34,10 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
-from cpu_gauge import gauge  # noqa: E402
+from cpu_gauge import gauge, wait_for_quiet  # noqa: E402
 
-LO = float(os.environ.get("QC_LO", "0.93"))
-HI = float(os.environ.get("QC_HI", "1.10"))
 ACCEPT = float(os.environ.get("QC_ACCEPT", "0.9"))
 ATTEMPTS = int(os.environ.get("QC_ATTEMPTS", "40"))
-PROBE_SLEEP = int(os.environ.get("QC_PROBE_SLEEP", "240"))
 RUN_SLEEP = int(os.environ.get("QC_RUN_SLEEP", "360"))
 
 
@@ -56,16 +53,11 @@ def main() -> int:
         return 2
 
     for attempt in range(1, ATTEMPTS + 1):
-        g1 = gauge()
-        if not (LO <= g1 <= HI):
-            print(f"attempt {attempt}: probe1 {g1} outside [{LO},{HI}]", flush=True)
-            time.sleep(PROBE_SLEEP)
-            continue
-        time.sleep(30)
-        g2 = gauge()
-        print(f"attempt {attempt}: probes {g1} {g2}", flush=True)
-        if not (LO <= g2 <= HI):
-            time.sleep(PROBE_SLEEP)
+        if attempt > 1:
+            time.sleep(RUN_SLEEP)
+        quiet, probes = wait_for_quiet()
+        print(f"attempt {attempt}: probes {probes}", flush=True)
+        if not quiet:
             continue
         proc = subprocess.run(argv, capture_output=True, text=True)
         line = next(
@@ -74,20 +66,18 @@ def main() -> int:
         if line is None:
             sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-2000:])
             print(f"attempt {attempt}: no JSON line from command", flush=True)
-            time.sleep(RUN_SLEEP)
             continue
         try:
             d = json.loads(line)
         except json.JSONDecodeError:
             print(f"attempt {attempt}: unparseable JSON", flush=True)
-            time.sleep(RUN_SLEEP)
             continue
         hg = d.get("host_gauge") or {}
         before, after = hg.get("before"), hg.get("after")
         if before is None or after is None:
             # command doesn't self-gauge: stamp our own post-run probe
             after = gauge()
-            before = g2
+            before = probes[-1]
             d["host_gauge"] = {"before": before, "after": after}
         keep = f"{out_path or 'quiet_capture'}.attempt{attempt}"
         with open(keep, "w") as f:
@@ -100,7 +90,6 @@ def main() -> int:
             print(f"attempt {attempt}: ACCEPTED ({before}/{after})", flush=True)
             return 0
         print(f"attempt {attempt}: rejected ({before}/{after})", flush=True)
-        time.sleep(RUN_SLEEP)
     print("no quiet window found; see .attempt* files for raw evidence")
     return 1
 

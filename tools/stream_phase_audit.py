@@ -30,7 +30,6 @@ Usage:  python tools/stream_phase_audit.py [n_convs] [cpus]
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import os
 import shutil
@@ -39,6 +38,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench import chain  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -60,15 +61,18 @@ def run_variant(spark, name: str, src: str, work: str, sink_mode: str, stages: d
 
     from pipeflow_spark.streaming import ExactlyOnceSink, StreamingPipeline
 
-    sp = StreamingPipeline.read_transcripts(spark, src, max_files_per_trigger=2)
-    sp = sp.with_watermark("ts", "10 minutes").select("conv_id", "turn_idx", "ts")
-    if stages.get("dedupe"):
-        sp = sp.dedupe_within_watermark(["conv_id", "turn_idx"])
-    if stages.get("agg"):
-        sp = sp.tumbling_agg(
-            "ts", "5 minutes", ["conv_id"],
-            F.count("*").alias("n"), F.max("turn_idx").alias("max_turn"),
-        ).select(F.col("w.start").alias("ws"), "conv_id", "n", "max_turn")
+    if stages.get("dedupe") and stages.get("agg"):
+        sp = chain.north_star(spark, src, max_files_per_trigger=2)
+    else:  # ablation: the chain with a stateful stage left out
+        sp = StreamingPipeline.read_transcripts(spark, src, max_files_per_trigger=2)
+        sp = sp.with_watermark("ts", "10 minutes").select("conv_id", "turn_idx", "ts")
+        if stages.get("dedupe"):
+            sp = sp.dedupe_within_watermark(["conv_id", "turn_idx"])
+        if stages.get("agg"):
+            sp = sp.tumbling_agg(
+                "ts", "5 minutes", ["conv_id"],
+                F.count("*").alias("n"), F.max("turn_idx").alias("max_turn"),
+            ).select(F.col("w.start").alias("ws"), "conv_id", "n", "max_turn")
 
     ckpt = os.path.join(work, f"ckpt_{name}")
     t0 = time.monotonic()
@@ -118,11 +122,6 @@ def main() -> dict:
     from cpu_gauge import gauge
 
     from pipeflow_spark.session import get_spark
-    from pipeflow_spark.streaming.transcripts import (
-        synthesize_transcripts,
-        write_arrival_files,
-        write_sentinel_file,
-    )
 
     g_before = gauge()
     state_parts = int(os.environ.get("SPARK_GRAFT_AUDIT_STATE_PARTITIONS", "16"))
@@ -139,9 +138,8 @@ def main() -> dict:
 
     work = tempfile.mkdtemp(prefix="pipeflow_phase_audit_")
     src = os.path.join(work, "src")
-    pdf = synthesize_transcripts(n_convs=n_convs, n_files=8, seed=42, late_frac=0.02)
-    write_arrival_files(pdf, src)
-    write_sentinel_file(src, dt.datetime(2026, 1, 1))
+    pdf = chain.synthesize(42, n_convs=n_convs, n_files=8)
+    chain.write_files(pdf, src)
     n_turns = len(pdf)
 
     variants = [
