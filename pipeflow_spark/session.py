@@ -200,50 +200,52 @@ def _planned_width(df) -> int:
     ``maxPartitionBytes``; a remote store costs no extra call), a cached
     table its partitions and in-memory size, an RDD scan its RDD's
     partitions and local rows one slice per row up to the default
-    parallelism.  RDD and local scans have no byte count, so they stand in
-    with the Catalyst estimate of the whole plan (their own estimates can be
-    far off: the checkpointed output of the iterative connected-components
-    loop claims ~10^40 bytes).  A shuffle reports what AQE will coalesce
-    its scans' bytes to; the whole plan's estimate would not do there,
-    because the optimizer can expect a join or aggregate to grow the data
-    several times over.  A broadcast build side adds no partitions; a union
-    sums its children's widths and every other operator keeps its widest
-    child's."""
+    parallelism.  RDD and local scans have no byte count (their own
+    estimates can be far off: the checkpointed output of the iterative
+    connected-components loop claims ~10^40 bytes), so they only flag that
+    the Catalyst estimate of the whole plan stands in for them; a shuffle
+    above flagged scans adds that estimate once, however many there are.
+    A shuffle reports what AQE will coalesce its scans' bytes to; the whole
+    plan's estimate alone would not do there, because the optimizer can
+    expect a join or aggregate to grow the data several times over.  A
+    broadcast build side adds no partitions; a union sums its children's
+    widths and every other operator keeps its widest child's."""
     spark = df.sparkSession
     qe = df._jdf.queryExecution()
     whole = int(qe.optimizedPlan().stats().sizeInBytes())
 
-    def walk(plan) -> tuple[int, int]:
+    def walk(plan) -> tuple[int, int, bool]:
+        """(width, bytes of sized scans beneath, any unsized scan beneath)"""
         name = plan.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
             return walk(plan.initialPlan())
         kids = [walk(plan.children().apply(i)) for i in range(plan.children().size())]
-        size = sum(b for _, b in kids)
+        size = sum(k[1] for k in kids)
+        unsized = any(k[2] for k in kids)
         if name == "BroadcastExchangeExec":
-            return 0, size
+            return 0, size, unsized
         if name == "ShuffleExchangeExec":
             n = plan.outputPartitioning().numPartitions()
             if plan.shuffleOrigin().toString() == "REPARTITION_BY_NUM":
-                return n, size  # an explicit repartition(n): AQE leaves it at n
-            return _coalesced_width(spark, n, size), size
+                return n, size, unsized  # an explicit repartition(n): AQE leaves it at n
+            return _coalesced_width(spark, n, size + whole * unsized), size, unsized
         if kids:
-            width = sum(w for w, _ in kids) if name == "UnionExec" else max(w for w, _ in kids)
-            return width, size
+            widths = [k[0] for k in kids]
+            return (sum(widths) if name == "UnionExec" else max(widths)), size, unsized
         n = plan.outputPartitioning().numPartitions()
         if name == "FileSourceScanExec":
             loc = plan.relation().location()
             size = int(loc.sizeInBytes())
             mpb = _byte_string_as_bytes(
                 str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")))
-            return n or max(len(loc.inputFiles()), -(-size // mpb), 1), size
+            return n or max(len(loc.inputFiles()), -(-size // mpb), 1), size, False
         if name == "InMemoryTableScanExec":
-            size = int(plan.relation().computeStats().sizeInBytes())
-            return n or 1, size
+            return n or 1, int(plan.relation().computeStats().sizeInBytes()), False
         if name == "RDDScanExec":
-            return plan.rdd().getNumPartitions(), whole
+            return plan.rdd().getNumPartitions(), 0, True
         if name == "LocalTableScanExec":  # Spark's numParallelism rule
-            return min(max(plan.rows().size(), 1), spark.sparkContext.defaultParallelism), whole
-        return n or 1, whole
+            return min(max(plan.rows().size(), 1), spark.sparkContext.defaultParallelism), 0, True
+        return n or 1, 0, True
 
     return walk(qe.executedPlan())[0]
 

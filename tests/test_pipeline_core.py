@@ -129,7 +129,12 @@ def test_spread_plans_without_running_jobs(spark):
     cached = spark.range(200).persist()
     cached.count()
     cached_agg = cached.groupBy((F.col("id") % 7).alias("k")).count()
-    for df in (anti, agg, cached_agg):
+    # two checkpoints with no byte count under one shuffle: the whole-plan
+    # estimate (~0.7 MB) stands in for them once, not once per checkpoint
+    union_agg = (spark.range(30_000).localCheckpoint()
+                 .union(spark.range(30_000).localCheckpoint())
+                 .groupBy((F.col("id") % 7).alias("k")).count())
+    for df in (anti, agg, cached_agg, union_agg):
         sc.setJobGroup("spread-probe", "spread")
         try:
             out = session.spread(df)

@@ -56,7 +56,9 @@ def wait_for_quiet(budget_sec: int = BUDGET) -> tuple[bool, list[float]]:
     probe itself drains the host's burst credits.
 
     Returns ``(quiet, probes)``: whether a window opened within
-    ``budget_sec``, and every probe reading (the passing pair last)."""
+    ``budget_sec``, and every probe reading (the passing pair last).
+    ``budget_sec=0`` makes one double probe that returns without sleeping;
+    ``tools/quiet_capture.py`` gates each of its attempts that way."""
     probes: list[float] = []
     deadline = time.monotonic() + budget_sec
     while True:

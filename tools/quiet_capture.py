@@ -9,10 +9,11 @@ Protocol learned over rounds 2–3:
 
 1. **Double-probe gate** (``cpu_gauge.wait_for_quiet``, shared with
    bench.py): two consecutive probes 30 s apart must BOTH land in the quiet
-   bounds before launching, with refill sleeps between failed probes.
-2. **Refill sleeps**: the measured run drains the host's burst credits too;
-   sleep ≥ 6 min after a failed attempt so the next probe measures the
-   host, not the run's own exhaust.
+   bounds before launching.  Each attempt makes one double probe.
+2. **Refill sleeps**: the 16-core probe and the measured run both drain the
+   host's burst credits; sleep ``SPARK_GRAFT_QUIET_SLEEP`` (4 min) after a
+   failed probe and ≥ 6 min after a failed run so the next probe measures
+   the host, not the probe's or the run's own exhaust.
 3. **Post-run verdict**: the captured JSON must embed its own before/after
    gauges (bench.py does); accept only if both ≥ accept threshold (0.9),
    else keep hunting.  Every rejected attempt is kept on disk — publish the
@@ -34,7 +35,7 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
-from cpu_gauge import gauge, wait_for_quiet  # noqa: E402
+from cpu_gauge import SLEEP, gauge, wait_for_quiet  # noqa: E402
 
 ACCEPT = float(os.environ.get("QC_ACCEPT", "0.9"))
 ATTEMPTS = int(os.environ.get("QC_ATTEMPTS", "40"))
@@ -53,11 +54,10 @@ def main() -> int:
         return 2
 
     for attempt in range(1, ATTEMPTS + 1):
-        if attempt > 1:
-            time.sleep(RUN_SLEEP)
-        quiet, probes = wait_for_quiet()
+        quiet, probes = wait_for_quiet(budget_sec=0)
         print(f"attempt {attempt}: probes {probes}", flush=True)
         if not quiet:
+            time.sleep(SLEEP)
             continue
         proc = subprocess.run(argv, capture_output=True, text=True)
         line = next(
@@ -66,11 +66,13 @@ def main() -> int:
         if line is None:
             sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-2000:])
             print(f"attempt {attempt}: no JSON line from command", flush=True)
+            time.sleep(RUN_SLEEP)
             continue
         try:
             d = json.loads(line)
         except json.JSONDecodeError:
             print(f"attempt {attempt}: unparseable JSON", flush=True)
+            time.sleep(RUN_SLEEP)
             continue
         hg = d.get("host_gauge") or {}
         before, after = hg.get("before"), hg.get("after")
@@ -90,6 +92,7 @@ def main() -> int:
             print(f"attempt {attempt}: ACCEPTED ({before}/{after})", flush=True)
             return 0
         print(f"attempt {attempt}: rejected ({before}/{after})", flush=True)
+        time.sleep(RUN_SLEEP)
     print("no quiet window found; see .attempt* files for raw evidence")
     return 1
 

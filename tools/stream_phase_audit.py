@@ -61,18 +61,15 @@ def run_variant(spark, name: str, src: str, work: str, sink_mode: str, stages: d
 
     from pipeflow_spark.streaming import ExactlyOnceSink, StreamingPipeline
 
-    if stages.get("dedupe") and stages.get("agg"):
-        sp = chain.north_star(spark, src, max_files_per_trigger=2)
-    else:  # ablation: the chain with a stateful stage left out
-        sp = StreamingPipeline.read_transcripts(spark, src, max_files_per_trigger=2)
-        sp = sp.with_watermark("ts", "10 minutes").select("conv_id", "turn_idx", "ts")
-        if stages.get("dedupe"):
-            sp = sp.dedupe_within_watermark(["conv_id", "turn_idx"])
-        if stages.get("agg"):
-            sp = sp.tumbling_agg(
-                "ts", "5 minutes", ["conv_id"],
-                F.count("*").alias("n"), F.max("turn_idx").alias("max_turn"),
-            ).select(F.col("w.start").alias("ws"), "conv_id", "n", "max_turn")
+    sp = StreamingPipeline.read_transcripts(spark, src, max_files_per_trigger=2)
+    sp = sp.with_watermark("ts", "10 minutes").select("conv_id", "turn_idx", "ts")
+    if stages.get("dedupe"):
+        sp = sp.dedupe_within_watermark(["conv_id", "turn_idx"])
+    if stages.get("agg"):
+        sp = sp.tumbling_agg(
+            "ts", "5 minutes", ["conv_id"],
+            F.count("*").alias("n"), F.max("turn_idx").alias("max_turn"),
+        ).select(F.col("w.start").alias("ws"), "conv_id", "n", "max_turn")
 
     ckpt = os.path.join(work, f"ckpt_{name}")
     t0 = time.monotonic()
