@@ -25,7 +25,7 @@ from __future__ import annotations
 import time
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Self
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -93,7 +93,7 @@ class Pipeline:
         return p
 
     # -- core relational stages (reference: Pipeline.cs:25-102) -------------
-    def filter(self, cond: ColumnOrName) -> "Pipeline":
+    def filter(self, cond: ColumnOrName) -> Self:
         """``Filter(predicate)`` — Pipeline.cs:25-37. Native Column predicate
         so Catalyst pushes it into the scan."""
         cond = F.expr(cond) if isinstance(cond, str) else cond
@@ -139,7 +139,7 @@ class Pipeline:
         return self._wrap(self._df.orderBy(*[_to_col(c).desc() for c in cols]))
 
     # -- DataRow transforms (reference: PipeFlow.cs:196-313) ----------------
-    def add_column(self, name: str, expr: ColumnOrName) -> "Pipeline":
+    def add_column(self, name: str, expr: ColumnOrName) -> Self:
         """``AddColumn`` — PipeFlow.cs:252-268."""
         expr = F.expr(expr) if isinstance(expr, str) else expr
         return self._wrap(self._df.withColumn(name, expr))
@@ -229,7 +229,7 @@ class Pipeline:
         return self._wrap(self._df.groupBy(*keys).applyInPandas(fn, schema=schema))
 
     # -- vectorized arbitrary transforms (north rule: Arrow, no per-row) ----
-    def transform_pandas(self, fn: Callable[[pd.DataFrame], pd.DataFrame], schema: str) -> "Pipeline":
+    def transform_pandas(self, fn: Callable[[pd.DataFrame], pd.DataFrame], schema: str) -> Self:
         """Arbitrary vectorized row-wise transform (``Map`` with a lambda the
         Column algebra can't express) — ``mapInPandas`` batch iterator."""
 

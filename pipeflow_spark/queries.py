@@ -23,6 +23,10 @@ mirrors a PipeFlow behavior.
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -61,6 +65,26 @@ def register(name: str, sql: str | None):
         return fn
 
     return deco
+
+
+def _scratch(fn):
+    """Give a registry query a private scratch dir: ``fn(spark, sf_dir,
+    work)`` builds its chain under ``work`` (sources, checkpoints, sinks)
+    and returns a frame that may read files there.  The frame is collected
+    before ``work`` is removed, whether the query succeeds or fails, so the
+    registry sees an in-memory ``(spark, sf_dir) -> DataFrame``."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        work = tempfile.mkdtemp(prefix=f"pipeflow_{fn.__name__}_")
+        try:
+            out = fn(spark, sf_dir, work)
+            rows, schema = out.collect(), out.schema
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+        return spark.createDataFrame(rows, schema)
+
+    return run
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1567,7 +1591,8 @@ def conversation_branching(spark, sf_dir):
     FROM per GROUP BY depth ORDER BY depth
     """,
 )
-def stream_branching_oracle(spark, sf_dir):
+@_scratch
+def stream_branching_oracle(spark, sf_dir, work):
     """Prefix-tree analytics over STREAM-ASSEMBLED conversations: the
     session_window transcript aggregate (each conversation emitted complete,
     exactly once, when the watermark closes it) feeds the per-batch prefix
@@ -1577,13 +1602,9 @@ def stream_branching_oracle(spark, sf_dir):
     contributes zero prefixes by the shared guard, so no read-back filter
     is needed.  Gap semantics are session_window's (new session at gap ≥
     30 min), mirrored in the oracle's ``>=``."""
-    import shutil
-    import tempfile
-
     from .operators.convtree import branching_report, prefix_rows_from_transcript
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_br_")
     src = _events_stream_source(spark, sf_dir, work)
     sp = StreamingPipeline(
         src.withWatermark("ts", "10 minutes")
@@ -1592,10 +1613,7 @@ def stream_branching_oracle(spark, sf_dir):
         .select("transcript")
     ).per_batch(lambda df: prefix_rows_from_transcript(df))
     pref = _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
-    out = branching_report(pref.select("depth", "prefix", "cont"))
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return branching_report(pref.select("depth", "prefix", "cont"))
 
 
 @register(
@@ -2220,9 +2238,9 @@ def repetition_profile(spark, sf_dir):
     )
 
 
-@register(
-    "decontaminate_ngram",
-    """
+# Every document's distinct whitespace-token 8-grams (the tokenizer of
+# decontaminate.contaminated_docs); docs 0-49 play the eval set below.
+_DOC_GRAMS8_SQL = """
     WITH toked AS (
       SELECT doc_id,
              string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
@@ -2232,7 +2250,10 @@ def repetition_profile(spark, sf_dir):
              list_distinct(list_transform(range(1, greatest(len(t) - 7, 1) + 1),
                i -> concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4], t[i+5], t[i+6], t[i+7]))) AS gs
       FROM toked
-    ), ev AS (
+    )"""
+# The decontamination contract: per training doc, how many distinct 8-grams
+# it shares with the eval set — pinned for the exact, bloom and stream paths.
+_DECONTAMINATE_SQL = _DOC_GRAMS8_SQL + """, ev AS (
       SELECT DISTINCT unnest(gs) AS g FROM g WHERE doc_id < 50
     ), tr AS (
       SELECT doc_id, unnest(gs) AS g FROM g WHERE doc_id >= 50
@@ -2240,8 +2261,10 @@ def repetition_profile(spark, sf_dir):
     SELECT doc_id, count(*) AS shared_grams
     FROM tr JOIN ev USING (g)
     GROUP BY doc_id ORDER BY doc_id
-    """,
-)
+    """
+
+
+@register("decontaminate_ngram", _DECONTAMINATE_SQL)
 def decontaminate_ngram(spark, sf_dir):
     """Benchmark decontamination (GPT-3 appendix-C style 8-gram overlap):
     docs 0-49 stand in as the eval/benchmark set, the rest as the training
@@ -2259,25 +2282,7 @@ def decontaminate_ngram(spark, sf_dir):
     # identical contract to decontaminate_ngram — the bloom stage is a
     # pre-filter whose false positives the exact verify join removes, so
     # the same oracle pins it
-    """
-    WITH toked AS (
-      SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
-      FROM documents
-    ), g AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(t) - 7, 1) + 1),
-               i -> concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4], t[i+5], t[i+6], t[i+7]))) AS gs
-      FROM toked
-    ), ev AS (
-      SELECT DISTINCT unnest(gs) AS g FROM g WHERE doc_id < 50
-    ), tr AS (
-      SELECT doc_id, unnest(gs) AS g FROM g WHERE doc_id >= 50
-    )
-    SELECT doc_id, count(*) AS shared_grams
-    FROM tr JOIN ev USING (g)
-    GROUP BY doc_id ORDER BY doc_id
-    """,
+    _DECONTAMINATE_SQL,
 )
 def decontaminate_bloom(spark, sf_dir):
     """Bloom-pre-filtered decontamination: same exact output as
@@ -2293,17 +2298,8 @@ def decontaminate_bloom(spark, sf_dir):
 
 @register(
     "contamination_audit",
-    """
-    WITH toked AS (
-      SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
-      FROM documents
-    ), g AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(t) - 7, 1) + 1),
-               i -> concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4], t[i+5], t[i+6], t[i+7]))) AS gs
-      FROM toked
-    ), ev AS (
+    _DOC_GRAMS8_SQL
+    + """, ev AS (
       SELECT DISTINCT doc_id AS eval_id, unnest(gs) AS g FROM g WHERE doc_id < 50
     ), tr AS (
       SELECT doc_id, unnest(gs) AS g FROM g WHERE doc_id >= 50
@@ -2337,7 +2333,8 @@ def contamination_audit(spark, sf_dir):
     ORDER BY id
     """,
 )
-def stream_asof_attribution_oracle(spark, sf_dir):
+@_scratch
+def stream_asof_attribution_oracle(spark, sf_dir, work):
     """Streaming backward as-of join (purchase → latest prior view per user
     — last-touch attribution), the "latest match only" enrichment Spark's
     native stream-stream joins cannot express.  Watermark-buffered
@@ -2346,12 +2343,8 @@ def stream_asof_attribution_oracle(spark, sf_dir):
     so state is bounded by the watermark horizon on an unbounded stream.
     Committed exactly-once snapshot must equal DuckDB's native batch
     ASOF LEFT JOIN over the same table."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_asof_")
     src = _events_stream_source(spark, sf_dir, work)
     sp = (
         StreamingPipeline(src)
@@ -2368,14 +2361,11 @@ def stream_asof_attribution_oracle(spark, sf_dir):
         )
         .select("k", "id", "ts", "matched_ts", F.round("matched_val", 4).alias("matched_val"))
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .select("k", "id", "ts", "matched_ts", "matched_val")
         .orderBy("id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 # Deterministic-sampling oracle fragments share the Column definitions'
@@ -2647,7 +2637,8 @@ def mixture_temperature(spark, sf_dir):
     FROM sc GROUP BY doc_id HAVING round(avg(nll), 5) <= 3.4 ORDER BY doc_id
     """,
 )
-def stream_perplexity_gate_oracle(spark, sf_dir):
+@_scratch
+def stream_perplexity_gate_oracle(spark, sf_dir, work):
     """Ingest-time perplexity quality gate, batch-equality proven: the
     documents table replayed as a file stream through map-only bigram
     fan-out → stream-static broadcast join against the offline-trained
@@ -2658,12 +2649,8 @@ def stream_perplexity_gate_oracle(spark, sf_dir):
     itself carries NO state (re-broadcast per micro-batch), so a model
     refresh is a restart-free swap of the train-side table
     (streaming/engine.py:perplexity_gate)."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_ppl_")
     train = _t(spark, sf_dir, "documents").filter(F.col("lang") == "en")
     stream = _documents_stream_source(spark, sf_dir, work)
     sp = (
@@ -2671,15 +2658,12 @@ def stream_perplexity_gate_oracle(spark, sf_dir):
         .with_watermark("ts", "10 minutes")
         .perplexity_gate(train, max_xent=3.4)
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("doc_id") < 4_000_000_000)
         .select("doc_id", "n_bigrams", "xent")
         .orderBy("doc_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -3207,7 +3191,8 @@ def embed_quantized_topk(spark, sf_dir):
     ORDER BY vec_id
     """,
 )
-def stream_ivf_ingest_oracle(spark, sf_dir):
+@_scratch
+def stream_ivf_ingest_oracle(spark, sf_dir, work):
     """Streaming IVF index ingest, batch-equality proven: embeddings
     replayed as a file stream through the stateless max-cosine list
     assignment (centroid matrix in the Arrow kernel's closure — zero
@@ -3216,12 +3201,9 @@ def stream_ivf_ingest_oracle(spark, sf_dir):
     the write path that keeps the IVF ANN index fresh at ingest
     (streaming/engine.py:assign_ivf + operators/similarity.py:ivf_assign)."""
     import os as _os
-    import shutil
-    import tempfile
 
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_ivf_")
     emb = _t(spark, sf_dir, "embeddings")
     cent_rows = (
         emb.filter((F.col("vec_id") % 31 == 0) & (F.col("vec_id") < 496))
@@ -3237,14 +3219,11 @@ def stream_ivf_ingest_oracle(spark, sf_dir):
     )
     stream = spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1).parquet(src)
     sp = StreamingPipeline(stream).assign_ivf(centroids).select("vec_id", "list_id")
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .select("vec_id", "list_id")
         .orderBy("vec_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -3275,7 +3254,8 @@ def stream_ivf_ingest_oracle(spark, sf_dir):
     ORDER BY vec_id, j
     """,
 )
-def stream_ivfpq_ingest_oracle(spark, sf_dir):
+@_scratch
+def stream_ivfpq_ingest_oracle(spark, sf_dir, work):
     """Streaming IVFADC index ingest: embeddings replayed as a file stream
     through the stateless coarse-assign + Arrow residual-PQ encode
     (ivfpq_encode — centroids and codebooks as plan/kernel constants, zero
@@ -3286,12 +3266,9 @@ def stream_ivfpq_ingest_oracle(spark, sf_dir):
     kernel as production, a green row certifies the numpy accumulation
     order against DuckDB directly."""
     import os as _os
-    import shutil
-    import tempfile
 
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_ivfpq_")
     emb = _t(spark, sf_dir, "embeddings")
     cent_rows = (
         emb.filter((F.col("vec_id") % 31 == 0) & (F.col("vec_id") < 496))
@@ -3313,15 +3290,12 @@ def stream_ivfpq_ingest_oracle(spark, sf_dir):
     enc = similarity.ivfpq_encode(stream, centroids, books)
     sp = StreamingPipeline(enc.select("vec_id", "list_id", "codes"))
     committed = _committed(spark, sp, work + "/sink", work + "/ckpt")
-    out = (
+    return (
         committed.select(
             "vec_id", "list_id", F.posexplode("codes").alias("j", "code")
         )
         .orderBy("vec_id", "j")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 _BAND_POSTINGS = "\n      UNION ALL ".join(
@@ -3741,18 +3715,15 @@ def multimodal_frame_sample(spark, sf_dir):
     ORDER BY conv_id
     """,
 )
-def stream_join_replies_e2e(spark, sf_dir):
+@_scratch
+def stream_join_replies_e2e(spark, sf_dir, work):
     """North-rule stream-stream join end-to-end: user turns ⋈ assistant/tool
     replies on (conv_id, turn_idx+1) within a reply-delay bound, both sides
     watermarked, through the exactly-once sink; per-conv pair counts returned
     (deterministic: seed 42, watermark covers all arrivals)."""
-    import shutil
-    import tempfile
-
     from .streaming import ExactlyOnceSink, StreamingPipeline
     from .streaming.transcripts import synthesize_transcripts, write_arrival_files
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_join_q_")
     src = f"{work}/src"
     pdf = synthesize_transcripts(n_convs=40, n_files=4, seed=42, late_frac=0.0)
     write_arrival_files(pdf, src)
@@ -3772,15 +3743,12 @@ def stream_join_replies_e2e(spark, sf_dir):
     sink = ExactlyOnceSink(f"{work}/sink")
     q = joined.start_exactly_once(sink, f"{work}/ckpt", output_mode="append")
     q.awaitTermination()
-    out = (
+    return (
         sink.read_committed(spark)
         .groupBy(F.col("u_conv_id").alias("conv_id"))
         .agg(F.count("*").alias("n_pairs"), F.max("a_turn_idx").alias("last_reply_turn"))
         .orderBy("conv_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 def _stage_single_parquet(df, stage_dir: str, dest_path: str) -> None:
@@ -3788,11 +3756,10 @@ def _stage_single_parquet(df, stage_dir: str, dest_path: str) -> None:
     coalesce(1) stage dir): arrival files must be single-file so
     ``maxFilesPerTrigger=1`` replays one deterministic micro-batch each."""
     import os as _os
-    import shutil as _shutil
 
     df.coalesce(1).write.mode("overwrite").parquet(stage_dir)
     part = next(f for f in _os.listdir(stage_dir) if f.endswith(".parquet"))
-    _shutil.copy(_os.path.join(stage_dir, part), dest_path)
+    shutil.copy(_os.path.join(stage_dir, part), dest_path)
 
 
 def _events_stream_source(spark, sf_dir: str, work: str):
@@ -3810,7 +3777,6 @@ def _events_stream_source(spark, sf_dir: str, work: str):
     """
     import datetime as _dt
     import os as _os
-    import shutil as _shutil
 
     batch = _t(spark, sf_dir, "events")
     src = _os.path.join(work, "src")
@@ -3834,25 +3800,32 @@ def _events_stream_source(spark, sf_dir: str, work: str):
     )
 
 
-def _committed(spark, sp, sink_root: str, ckpt: str):
-    """Run a bounded stream to completion through the exactly-once sink and
-    return the committed snapshot as a local-batch DataFrame.
-
-    State partitions are pinned to 8 for the duration (stateful-op partition
-    count bakes into the checkpoint at first start, and each partition is a
-    state store with fixed per-batch commit cost — at this bounded replay's
-    size, fewer/larger stores beat many tiny ones; production sizes this for
-    the largest planned cluster instead)."""
-    from .streaming import ExactlyOnceSink
-
+@contextlib.contextmanager
+def _state_partitions(spark):
+    """Pin state partitions to 8 while a bounded stream runs, then restore
+    the session's value so read-back plans are unchanged.  Stateful-op
+    partition count bakes into the checkpoint at first start, and each
+    partition is a state store with fixed per-batch commit cost — at this
+    bounded replay's size, fewer/larger stores beat many tiny ones;
+    production sizes this for the largest planned cluster instead."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _committed(spark, sp, sink_root: str, ckpt: str):
+    """Run a bounded stream to completion through the exactly-once sink
+    (state partitions pinned, see :func:`_state_partitions`) and return the
+    committed snapshot."""
+    from .streaming import ExactlyOnceSink
+
+    with _state_partitions(spark):
         sink = ExactlyOnceSink(sink_root)
         q = sp.start_exactly_once(sink, ckpt, output_mode="append")
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return sink.read_committed(spark)
 
 
@@ -3864,19 +3837,16 @@ def _committed(spark, sp, sink_root: str, ckpt: str):
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
 )
-def stream_events_tumbling_oracle(spark, sf_dir):
+@_scratch
+def stream_events_tumbling_oracle(spark, sf_dir, work):
     """The north-star batch-equality proof with a real SQL oracle: the full
     micro-batch chain (file-source stream → watermark → stateful dedupe →
     tumbling window agg → exactly-once ledgered sink) over the driver's own
     events table; the committed snapshot must equal the plain batch SQL
     aggregate bit-for-bit ("reproduce the reference pipeline's output rows
     for the same input stream and watermark")."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_ev_")
     sp = (
         StreamingPipeline(_events_stream_source(spark, sf_dir, work))
         .with_watermark("ts", "10 minutes")
@@ -3886,15 +3856,12 @@ def stream_events_tumbling_oracle(spark, sf_dir):
         )
         .select(F.col("w.start").alias("ws"), "event_type", "n", "total")
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("event_type") != "__sentinel__")
         .select("ws", "event_type", "n", "total")
         .orderBy("ws", "event_type")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -3916,7 +3883,8 @@ def stream_events_tumbling_oracle(spark, sf_dir):
     FROM sess GROUP BY user_id, sid ORDER BY user_id, session_start
     """,
 )
-def stream_events_session_oracle(spark, sf_dir):
+@_scratch
+def stream_events_session_oracle(spark, sf_dir, work):
     """Streaming ``session_window`` (30-min gap, per user) through the
     exactly-once sink vs the gaps-and-islands batch SQL.  Semantics pinned:
     Spark merges an event into a session iff it lands strictly inside
@@ -3925,12 +3893,8 @@ def stream_events_session_oracle(spark, sf_dir):
     reference semantics use ``>``, a deliberate difference documented there).
     ``session_window.start`` = min event ts of the merged session ≡
     ``min(ts)`` per island."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_sess_")
     src = _events_stream_source(spark, sf_dir, work)
     sp = StreamingPipeline(
         src.withWatermark("ts", "10 minutes")
@@ -3938,15 +3902,12 @@ def stream_events_session_oracle(spark, sf_dir):
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("session_start"), "user_id", "n_events")
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("user_id") != -1)
         .select("user_id", "session_start", "n_events")
         .orderBy("user_id", "session_start")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -3973,7 +3934,8 @@ def stream_events_session_oracle(spark, sf_dir):
     FROM sess GROUP BY user_id, sid ORDER BY user_id, session_start
     """,
 )
-def stream_events_session_dynamic_oracle(spark, sf_dir):
+@_scratch
+def stream_events_session_dynamic_oracle(spark, sf_dir, work):
     """Streaming DYNAMIC-gap ``session_window`` (gap is a Column: 30 min
     after a purchase, 5 min otherwise) through the exactly-once sink vs the
     running-max gaps-and-islands batch SQL.  Each event claims
@@ -3981,12 +3943,8 @@ def stream_events_session_dynamic_oracle(spark, sf_dir):
     bound and watermark eviction behave exactly as with a fixed gap — the
     sentinel (gap 300s, far future) closes every real session.  Batch twin:
     `session_dynamic_gap` / ``operators.sessionize.sessionize_dynamic``."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_dsess_")
     src = _events_stream_source(spark, sf_dir, work)
     gap = F.when(F.col("event_type") == "purchase", F.lit("30 minutes")).otherwise(
         F.lit("5 minutes")
@@ -3997,15 +3955,12 @@ def stream_events_session_dynamic_oracle(spark, sf_dir):
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("session_start"), "user_id", "n_events")
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("user_id") != -1)
         .select("user_id", "session_start", "n_events")
         .orderBy("user_id", "session_start")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4029,7 +3984,8 @@ def stream_events_session_dynamic_oracle(spark, sf_dir):
     FROM sess GROUP BY user_id, sid ORDER BY user_id, session_start
     """,
 )
-def stream_events_transcripts_oracle(spark, sf_dir):
+@_scratch
+def stream_events_transcripts_oracle(spark, sf_dir, work):
     """Streaming transcript assembly — the north star's 'build training
     examples from transcript streams' op: session_window (30-min gap) whose
     aggregate is the full ordered event path (collect_list structs →
@@ -4037,12 +3993,8 @@ def stream_events_transcripts_oracle(spark, sf_dir):
     session; committed snapshot must equal the gaps-and-islands batch SQL
     (``>=`` gap, session_window merge semantics — see
     stream_events_session_oracle)."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_tx_")
     src = _events_stream_source(spark, sf_dir, work)
     sp = StreamingPipeline(
         src.withWatermark("ts", "10 minutes")
@@ -4050,15 +4002,12 @@ def stream_events_transcripts_oracle(spark, sf_dir):
         .agg(_ordered_path().alias("transcript"), F.count("*").alias("n_turns"))
         .select(F.col("w.start").alias("session_start"), "user_id", "transcript", "n_turns")
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("user_id") != -1)
         .select("user_id", "session_start", "transcript", "n_turns")
         .orderBy("user_id", "session_start")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4073,7 +4022,8 @@ def stream_events_transcripts_oracle(spark, sf_dir):
     FROM w GROUP BY 1, 2 ORDER BY 1, 2
     """,
 )
-def stream_events_sliding_oracle(spark, sf_dir):
+@_scratch
+def stream_events_sliding_oracle(spark, sf_dir, work):
     """Streaming sliding windows (1 h size, 30 min slide) through watermark +
     stateful dedupe + the exactly-once sink vs a batch SQL twin: every event
     belongs to exactly size/slide = 2 windows, so the oracle unnests each row
@@ -4081,12 +4031,8 @@ def stream_events_sliding_oracle(spark, sf_dir):
     engines 30-min-align to an epoch origin, so boundaries agree exactly.
     Completes the oracle-checked window family (tumbling / sliding /
     session)."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_slide_")
     sp = (
         StreamingPipeline(_events_stream_source(spark, sf_dir, work))
         .with_watermark("ts", "10 minutes")
@@ -4097,15 +4043,12 @@ def stream_events_sliding_oracle(spark, sf_dir):
         )
         .select(F.col("w.start").alias("ws"), "event_type", "n", "total")
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("event_type") != "__sentinel__")
         .select("ws", "event_type", "n", "total")
         .orderBy("ws", "event_type")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4147,7 +4090,8 @@ def udtf_json_props(spark, sf_dir):
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
 )
-def stream_window_median_oracle(spark, sf_dir):
+@_scratch
+def stream_window_median_oracle(spark, sf_dir, work):
     """Exact windowed median on a stream: ``percentile`` is a
     TypedImperativeAggregate whose buffer lives in the state store, so the
     exact quantile is computable per closed window (the oracle-able twin;
@@ -4155,12 +4099,8 @@ def stream_window_median_oracle(spark, sf_dir):
     the buffer here grows with rows-per-window, which a window bound keeps
     finite but not small).  Committed append-mode snapshot must equal
     DuckDB's interpolated ``median`` per bucket."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_med_")
     sp = (
         StreamingPipeline(_events_stream_source(spark, sf_dir, work))
         .with_watermark("ts", "10 minutes")
@@ -4172,15 +4112,12 @@ def stream_window_median_oracle(spark, sf_dir):
         )
         .select(F.col("w.start").alias("ws"), "event_type", "n", "med")
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("event_type") != "__sentinel__")
         .select("ws", "event_type", "n", "med")
         .orderBy("ws", "event_type")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4195,19 +4132,16 @@ def stream_window_median_oracle(spark, sf_dir):
     GROUP BY 1 ORDER BY 1
     """,
 )
-def stream_events_join_oracle(spark, sf_dir):
+@_scratch
+def stream_events_join_oracle(spark, sf_dir, work):
     """Stateful stream-stream time-interval join with a SQL oracle: click
     stream ⋈ purchase stream on user_id with purchases within 1 h after the
     click, both sides watermarked (state cleanup), committed exactly-once,
     then aggregated per user on the committed snapshot.  Inner-join emission
     is deterministic (rows emit when matched; the watermark only bounds
     state), so the committed pair set ≡ the batch interval join."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_j_")
     src = _events_stream_source(spark, sf_dir, work)
     clicks = (
         src.filter(F.col("event_type") == "click")
@@ -4230,15 +4164,12 @@ def stream_events_join_oracle(spark, sf_dir):
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
         "inner",
     ).select("c_user", "c_ts", "c_id", "p_ts", "p_value")
-    out = (
+    return (
         _committed(spark, StreamingPipeline(joined), f"{work}/sink", f"{work}/ckpt")
         .groupBy(F.col("c_user").alias("user_id"))
         .agg(F.count("*").alias("n_pairs"), F.round(F.sum("p_value"), 4).alias("purchase_total"))
         .orderBy("user_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4255,7 +4186,8 @@ def stream_events_join_oracle(spark, sf_dir):
     GROUP BY cid ORDER BY cid
     """,
 )
-def stream_left_join_unanswered_oracle(spark, sf_dir):
+@_scratch
+def stream_left_join_unanswered_oracle(spark, sf_dir, work):
     """LEFT OUTER stream-stream join with a SQL oracle: clicks left-joined to
     purchases within 1 h.  Matched rows emit on match; unmatched clicks emit
     once with NULL purchase columns when the watermark passes their join
@@ -4264,12 +4196,8 @@ def stream_left_join_unanswered_oracle(spark, sf_dir):
     the watermark nodes to force that eviction, so both side filters keep
     ``__sentinel__`` rows; the two sentinel rows then match each other
     (same user −1, same ts) and are dropped on read-back."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_loj_")
     src = _events_stream_source(spark, sf_dir, work)
     clicks = (
         src.filter(F.col("event_type").isin("click", "__sentinel__"))
@@ -4292,7 +4220,7 @@ def stream_left_join_unanswered_oracle(spark, sf_dir):
         & (F.col("pts") <= F.col("cts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer",
     ).select("cid", "pv")
-    out = (
+    return (
         _committed(spark, StreamingPipeline(joined), f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("cid") >= 0)  # drop the sentinel-sentinel pair
         .groupBy(F.col("cid").alias("click_id"))
@@ -4302,9 +4230,6 @@ def stream_left_join_unanswered_oracle(spark, sf_dir):
         )
         .orderBy("click_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4325,7 +4250,8 @@ def stream_left_join_unanswered_oracle(spark, sf_dir):
     FROM j GROUP BY 1 ORDER BY 1
     """,
 )
-def stream_full_join_oracle(spark, sf_dir):
+@_scratch
+def stream_full_join_oracle(spark, sf_dir, work):
     """FULL OUTER stream-stream join — the join matrix completed (inner =
     `stream_events_join_oracle`, left = `stream_left_join_unanswered_oracle`):
     orphans on BOTH sides emit once, with the other side NULL, when their own
@@ -4335,12 +4261,8 @@ def stream_full_join_oracle(spark, sf_dir):
     pattern itself, not just row counts.  Sentinel rows reach both watermark
     nodes, match each other (same user −1, same ts), and are dropped on
     read-back via cid = −1."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_foj_")
     src = _events_stream_source(spark, sf_dir, work)
     clicks = (
         src.filter(F.col("event_type").isin("click", "__sentinel__"))
@@ -4373,7 +4295,7 @@ def stream_full_join_oracle(spark, sf_dir):
             .alias("kind"),
         )
     )
-    out = (
+    return (
         _committed(spark, StreamingPipeline(joined), f"{work}/sink", f"{work}/ckpt")
         .filter(F.coalesce(F.col("cid"), F.lit(0)) != -1)  # drop the sentinel pair
         .groupBy("kind")
@@ -4383,9 +4305,6 @@ def stream_full_join_oracle(spark, sf_dir):
         )
         .orderBy("kind")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4396,7 +4315,8 @@ def stream_full_join_oracle(spark, sf_dir):
     FROM events WHERE event_type <> '__sentinel__' GROUP BY 1, 2 ORDER BY 1, 2
     """,
 )
-def stream_update_upsert_oracle(spark, sf_dir):
+@_scratch
+def stream_update_upsert_oracle(spark, sf_dir, work):
     """LIVE aggregate table: the same tumbling aggregate as
     `stream_events_tumbling_oracle`, but in UPDATE output mode through the
     streaming MERGE sink (`start_upsert`) instead of append + ledger — every
@@ -4406,13 +4326,9 @@ def stream_update_upsert_oracle(spark, sf_dir):
     the batch GROUP BY.  This is the dashboard-facing output shape: results
     visible while windows are still open, exactly-once by idempotent
     re-merge rather than a ledger."""
-    import shutil
-    import tempfile
-
     from .sinks import read_upsert_table
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_uu_")
     src = _events_stream_source(spark, sf_dir, work)
     sp = StreamingPipeline(
         src.withWatermark("ts", "10 minutes")
@@ -4421,24 +4337,17 @@ def stream_update_upsert_oracle(spark, sf_dir):
         .select(F.col("w.start").alias("ws"), "event_type", "n", "total")
     )
     table = f"{work}/live_table"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = sp.start_upsert(
             table, keys=["ws", "event_type"], checkpoint_dir=f"{work}/ckpt"
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    out = (
+    return (
         read_upsert_table(spark, table)
         .filter(F.col("event_type") != "__sentinel__")
         .select("ws", "event_type", "n", "total")
         .orderBy("ws", "event_type")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4453,7 +4362,8 @@ def stream_update_upsert_oracle(spark, sf_dir):
     ORDER BY user_id, valid_from, change_id
     """,
 )
-def stream_scd2_dim_oracle(spark, sf_dir):
+@_scratch
+def stream_scd2_dim_oracle(spark, sf_dir, work):
     """STREAMING SCD2 maintenance (StreamingPipeline.start_scd2 →
     operators/scd.py scd2_apply_batch): the purchase stream is a CDC change
     feed; every micro-batch rebuilds the touched users' version intervals
@@ -4463,13 +4373,9 @@ def stream_scd2_dim_oracle(spark, sf_dir):
     left open by batch N is closed by batch N+1) are exactly what this
     certifies.  No watermark: late changes re-cut their key instead of
     being dropped."""
-    import shutil
-    import tempfile
-
     from .sinks import read_upsert_table
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_scd2_")
     src = _events_stream_source(spark, sf_dir, work)
     sp = StreamingPipeline(
         src.filter(F.col("event_type") == "purchase").select(
@@ -4483,9 +4389,7 @@ def stream_scd2_dim_oracle(spark, sf_dir):
         )
     )
     table = f"{work}/dim"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = sp.start_scd2(
             table,
             keys=["user_id"],
@@ -4495,16 +4399,11 @@ def stream_scd2_dim_oracle(spark, sf_dir):
             checkpoint_dir=f"{work}/ckpt",
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    out = (
+    return (
         read_upsert_table(spark, table)
         .select("user_id", "change_id", "tier", "valid_from", "valid_to")
         .orderBy("user_id", "valid_from", "change_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4528,7 +4427,8 @@ def stream_scd2_dim_oracle(spark, sf_dir):
     ORDER BY f.event_id
     """,
 )
-def stream_scd2_enrich_oracle(spark, sf_dir):
+@_scratch
+def stream_scd2_enrich_oracle(spark, sf_dir, work):
     """End-to-end temporal composition: stage 1 maintains the SCD2 dimension
     from the purchase CHANGE STREAM (start_scd2, exactly-once group MERGE);
     stage 2 point-in-time-enriches the click STREAM against that table with
@@ -4539,19 +4439,13 @@ def stream_scd2_enrich_oracle(spark, sf_dir):
     the streaming table's uncollapsed version storage (adjacent same-tier
     versions answer identically at every instant, so the oracle can use the
     plain uncollapsed interval cut)."""
-    import shutil
-    import tempfile
-
     from .operators.scd import scd2_enrich
     from .sinks import read_upsert_table
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_scd2e_")
     # stage 1: dimension maintenance from the purchase change stream
     src1 = _events_stream_source(spark, sf_dir, f"{work}/s1")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = StreamingPipeline(
             src1.filter(F.col("event_type") == "purchase").select(
                 "user_id",
@@ -4572,8 +4466,6 @@ def stream_scd2_enrich_oracle(spark, sf_dir):
             query_name="scd2e_dim",
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     dim = read_upsert_table(spark, f"{work}/dim").select(
         "user_id", "tier", "valid_from", "valid_to"
     )
@@ -4588,14 +4480,11 @@ def stream_scd2_enrich_oracle(spark, sf_dir):
         "ts",
         F.coalesce("tier", F.lit("none")).alias("tier_at_click"),
     )
-    out = (
+    return (
         _committed(spark, StreamingPipeline(enriched), f"{work}/sink", f"{work}/ckpt2")
         .select("event_id", "user_id", "ts", "tier_at_click")
         .orderBy("event_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4606,19 +4495,16 @@ def stream_scd2_enrich_oracle(spark, sf_dir):
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
 )
-def stream_distinct_users_oracle(spark, sf_dir):
+@_scratch
+def stream_distinct_users_oracle(spark, sf_dir, work):
     """EXACT streaming COUNT DISTINCT per hour window — countDistinct is
     rejected on streams, so this runs the chained-stateful-aggregation form
     (`tumbling_distinct_count`: groupBy(window, type, user) then re-agg over
     window_time) through the exactly-once sink, and must hash-equal the
     batch COUNT(DISTINCT) SQL.  Exactness is the point: the HLL twin
     (`approx_distinct_users`) can only ever be rows-only."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_du_")
     src = _events_stream_source(spark, sf_dir, work)
     sp = (
         StreamingPipeline(src.withWatermark("ts", "10 minutes"))
@@ -4627,15 +4513,12 @@ def stream_distinct_users_oracle(spark, sf_dir):
         )
         .select(F.col("w.start").alias("ws"), "event_type", "n_users", "n_events")
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("event_type") != "__sentinel__")
         .select("ws", "event_type", "n_users", "n_events")
         .orderBy("ws", "event_type")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4652,7 +4535,8 @@ def stream_distinct_users_oracle(spark, sf_dir):
     SELECT wstart, user_id, n, rk FROM r WHERE rk <= 5 ORDER BY wstart, rk
     """,
 )
-def stream_heavy_hitters_oracle(spark, sf_dir):
+@_scratch
+def stream_heavy_hitters_oracle(spark, sf_dir, work):
     """Top-5 users per hour from a BOUNDED-STATE streaming sketch: sharded
     Misra-Gries summaries over ``applyInPandasWithState`` keyed on
     ``(window, shard)``, flushed by an event-time timeout when the watermark
@@ -4662,12 +4546,8 @@ def stream_heavy_hitters_oracle(spark, sf_dir):
     the result provably equals the batch GROUP BY top-k the oracle computes;
     the approximation bound itself is pinned by pytest with a tiny capacity
     (``operators/heavy.py``)."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_hh_")
     src = _events_stream_source(spark, sf_dir, work)
     prepped = (
         src.withWatermark("ts", "10 minutes")
@@ -4687,7 +4567,7 @@ def stream_heavy_hitters_oracle(spark, sf_dir):
         timeout="EventTimeTimeout",
     )
     committed = _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
-    out = (
+    return (
         heavy.merge_heavy_hitters(committed.filter(F.col("key") != "-1"), k=5, key_type="long")
         .select(
             "wstart",
@@ -4697,9 +4577,6 @@ def stream_heavy_hitters_oracle(spark, sf_dir):
         )
         .orderBy("wstart", "rk")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4711,7 +4588,8 @@ def stream_heavy_hitters_oracle(spark, sf_dir):
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
 )
-def stream_enrich_static_oracle(spark, sf_dir):
+@_scratch
+def stream_enrich_static_oracle(spark, sf_dir, work):
     """Stream-static dimension enrichment with a SQL oracle: events stream →
     watermark → stateful dedupe → broadcast join to the static customer dim
     (map-only per micro-batch, NO join state — the only join shape whose
@@ -4720,12 +4598,8 @@ def stream_enrich_static_oracle(spark, sf_dir):
     join+aggregate.  The sentinel row (user_id −1) advances the watermark at
     the source and is then dropped by the inner dim join, so no read-back
     filter is needed."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_enr_")
     dim = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     sp = (
         StreamingPipeline(_events_stream_source(spark, sf_dir, work))
@@ -4743,14 +4617,11 @@ def stream_enrich_static_oracle(spark, sf_dir):
             F.col("w.start").alias("ws"), F.col("c_mktsegment").alias("segment"), "n", "total"
         )
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .select("ws", "segment", "n", "total")
         .orderBy("ws", "segment")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4795,7 +4666,8 @@ def pattern_funnel_events(spark, sf_dir):
     ORDER BY key
     """,
 )
-def stream_pattern_funnel_oracle(spark, sf_dir):
+@_scratch
+def stream_pattern_funnel_oracle(spark, sf_dir, work):
     """The same funnel as a *streaming* per-key finite automaton
     (``applyInPandasWithState``, O(1) int state per user — independent of
     history length, the posture 10^12 turns demands), run through the
@@ -4803,13 +4675,9 @@ def stream_pattern_funnel_oracle(spark, sf_dir):
     user on read-back.  Matches the batch regex oracle exactly — the
     automaton ≡ regex equivalence is property-tested in
     tests/test_operators.py."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
     steps = [("v", False), ("c", True), ("p", False)]
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_pat_")
     src = _events_stream_source(spark, sf_dir, work)
     sp = (
         StreamingPipeline(src)
@@ -4823,15 +4691,12 @@ def stream_pattern_funnel_oracle(spark, sf_dir):
             cep_pattern.PATTERN_STATE_SCHEMA,
         )
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .groupBy("key")
         .agg(F.count("*").alias("n_matches"))
         .orderBy("key")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4846,7 +4711,8 @@ def stream_pattern_funnel_oracle(spark, sf_dir):
     ORDER BY 1, 2
     """,
 )
-def stream_state_open_windows_oracle(spark, sf_dir):
+@_scratch
+def stream_state_open_windows_oracle(spark, sf_dir, work):
     """Offline state-store introspection with a full value-hash oracle
     (north rule: "resumable from checkpoint with per-partition lineage +
     metrics"): run the tumbling-window chain over the events table as a
@@ -4862,12 +4728,9 @@ def stream_state_open_windows_oracle(spark, sf_dir):
     event's sub-second offset, so the ``end > watermark`` boundary can't tie.
     """
     import os
-    import shutil
-    import tempfile
 
     from .streaming import StreamingPipeline, read_state
 
-    work = tempfile.mkdtemp(prefix="pipeflow_state_rd_")
     batch = _t(spark, sf_dir, "events")
     src = os.path.join(work, "src")
     os.makedirs(src)
@@ -4887,9 +4750,7 @@ def stream_state_open_windows_oracle(spark, sf_dir):
             "ts", "1 hour", ["event_type"], F.count("*").alias("n"), F.sum("value").alias("total")
         )
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = (
             sp._df.writeStream.format("noop")
             .option("checkpointLocation", os.path.join(work, "ckpt"))
@@ -4898,12 +4759,10 @@ def stream_state_open_windows_oracle(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # state value fields carry the aggregate's INTERNAL names (count/sum),
     # not the query aliases; rounding happens on read-back because the state
     # holds the raw partial sum.
-    out = (
+    return (
         read_state(spark, os.path.join(work, "ckpt"))
         .select(
             F.col("window.start").alias("ws"),
@@ -4913,9 +4772,6 @@ def stream_state_open_windows_oracle(spark, sf_dir):
         )
         .orderBy("ws", "event_type")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -4996,13 +4852,12 @@ def stream_state_open_windows_oracle(spark, sf_dir):
     ORDER BY conv_id, ws
     """,
 )
-def stream_tumbling_e2e(spark, sf_dir):
+@_scratch
+def stream_tumbling_e2e(spark, sf_dir, work):
     """Full micro-batch CEP chain end-to-end: deterministic transcript stream →
     watermark → stateful dedupe → tumbling per-conv window agg → exactly-once
     sink → read committed snapshot.  Deterministic output (seed 42)."""
     import datetime as dt
-    import shutil
-    import tempfile
 
     from .streaming import ExactlyOnceSink, StreamingPipeline
     from .streaming.transcripts import (
@@ -5012,7 +4867,6 @@ def stream_tumbling_e2e(spark, sf_dir):
         write_sentinel_file,
     )
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_q_")
     src = f"{work}/src"
     pdf = synthesize_transcripts(n_convs=40, n_files=4, seed=42, late_frac=0.0)
     write_arrival_files(pdf, src)
@@ -5027,15 +4881,12 @@ def stream_tumbling_e2e(spark, sf_dir):
     )
     q = sp.start_exactly_once(sink, f"{work}/ckpt", output_mode="append")
     q.awaitTermination()
-    out = (
+    return (
         sink.read_committed(spark)
         .filter(F.col("conv_id") != SENTINEL_CONV)
         .select("ws", "conv_id", "n", "max_turn")
         .orderBy("conv_id", "ws")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -5456,7 +5307,8 @@ def curate_training_corpus(spark, sf_dir):
     GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
 )
-def pruned_scan_orders(spark, sf_dir):
+@_scratch
+def pruned_scan_orders(spark, sf_dir, work):
     """Manifest-pruned scan (Iceberg manifest / Delta file-stats analog):
     orders rewritten Z-order-clustered on (o_custkey, o_totalprice) with a
     driver-side min/max manifest, then a 2-D range predicate resolves its
@@ -5465,26 +5317,19 @@ def pruned_scan_orders(spark, sf_dir):
     mechanism (predicates re-applied as filters); the oracle is the plain
     full-scan SQL, and ``test_manifest_prune``* assert the file-count
     reduction and full-scan equality."""
-    import shutil
-    import tempfile
-
     from .operators import zorder
 
-    work = tempfile.mkdtemp(prefix="pipeflow_zmanifest_")
     orders = _t(spark, sf_dir, "orders")
     zorder.write_zordered(orders, work, ["o_custkey", "o_totalprice"], files=8)
     zorder.write_manifest(spark, work, ["o_custkey", "o_totalprice"])
     df, kept, total = zorder.read_pruned(
         spark, work, {"o_custkey": (100, 500), "o_totalprice": (50000.0, 100000.0)}
     )
-    out = (
+    return (
         df.groupBy("o_orderpriority")
         .agg(F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 4).alias("total"))
         .orderBy("o_orderpriority")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -5508,7 +5353,8 @@ def pruned_scan_orders(spark, sf_dir):
     ORDER BY commit_version, o_orderkey
     """,
 )
-def change_feed_orders(spark, sf_dir):
+@_scratch
+def change_feed_orders(spark, sf_dir, work):
     """Change Data Feed on the snapshot table (Delta CDF / Iceberg changelog
     analog): two keyed MERGE commits over overlapping order keys, then the
     feed read back — every applied row tagged insert / update_postimage and
@@ -5520,12 +5366,8 @@ def change_feed_orders(spark, sf_dir):
     is pinned by ``test_stream_change_feed_tails_commits_incrementally``.
     Reference analog: the CDC shape PipeFlow's PostgreSqlWriter upsert
     (PostgreSqlWriter.cs:220-247) implies but never records."""
-    import shutil
-    import tempfile
-
     from .sinks import read_change_feed, upsert_parquet
 
-    work = tempfile.mkdtemp(prefix="pipeflow_cdf_")
     tbl = f"{work}/orders_tbl"
     orders = _t(spark, sf_dir, "orders")
     b1 = orders.filter(F.col("o_orderkey") % 10 < 5).select("o_orderkey", "o_totalprice")
@@ -5534,7 +5376,7 @@ def change_feed_orders(spark, sf_dir):
     )
     upsert_parquet(spark, b1, tbl, ["o_orderkey"], change_feed=True)
     upsert_parquet(spark, b2, tbl, ["o_orderkey"], change_feed=True)
-    out = (
+    return (
         read_change_feed(spark, tbl)
         .select(
             "o_orderkey",
@@ -5544,9 +5386,6 @@ def change_feed_orders(spark, sf_dir):
         )
         .orderBy("commit_version", "o_orderkey")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 def _documents_stream_source(spark, sf_dir: str, work: str):
@@ -5557,7 +5396,6 @@ def _documents_stream_source(spark, sf_dir: str, work: str):
     :func:`_events_stream_source` (same no-late-rows ⇒ stream ≡ batch
     contract, callers exclude the huge sentinel doc_id on read-back)."""
     import os as _os
-    import shutil as _shutil
 
     batch = _t(spark, sf_dir, "documents")
     src = _os.path.join(work, "src")
@@ -5590,29 +5428,9 @@ def _documents_stream_source(spark, sf_dir: str, work: str):
     )
 
 
-@register(
-    "stream_decontaminate_oracle",
-    """
-    WITH toked AS (
-      SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
-      FROM documents
-    ), g AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(t) - 7, 1) + 1),
-               i -> concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4], t[i+5], t[i+6], t[i+7]))) AS gs
-      FROM toked
-    ), ev AS (
-      SELECT DISTINCT unnest(gs) AS g FROM g WHERE doc_id < 50
-    ), tr AS (
-      SELECT doc_id, unnest(gs) AS g FROM g WHERE doc_id >= 50
-    )
-    SELECT doc_id, count(*) AS shared_grams
-    FROM tr JOIN ev USING (g)
-    GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def stream_decontaminate_oracle(spark, sf_dir):
+@register("stream_decontaminate_oracle", _DECONTAMINATE_SQL)
+@_scratch
+def stream_decontaminate_oracle(spark, sf_dir, work):
     """Ingest-time decontamination guard, batch-equality proven: the
     documents table replayed as a file stream (deterministic event time
     derived from doc_id) through gram explode → stream-static broadcast
@@ -5622,12 +5440,8 @@ def stream_decontaminate_oracle(spark, sf_dir):
     count keyed on (window, doc_id) over the MATCH set — clean documents
     never enter state, so state size tracks contamination, not throughput
     (streaming/engine.py:decontaminate)."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_decon_")
     ev = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     stream = _documents_stream_source(spark, sf_dir, work).filter(F.col("doc_id") >= 50)
     sp = (
@@ -5636,14 +5450,11 @@ def stream_decontaminate_oracle(spark, sf_dir):
         .decontaminate(ev, text_col="text", id_col="doc_id", ts_col="ts", window="1 hour", n=8)
         .select("doc_id", "shared_grams")
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .select("doc_id", "shared_grams")
         .orderBy("doc_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -5666,7 +5477,8 @@ def stream_decontaminate_oracle(spark, sf_dir):
     FROM judged ORDER BY doc_id
     """,
 )
-def stream_validate_dlq_oracle(spark, sf_dir):
+@_scratch
+def stream_validate_dlq_oracle(spark, sf_dir, work):
     """The reference's Validate stage as a streaming dead-letter queue,
     batch-equality proven: documents replayed as a file stream through ONE
     query whose foreachBatch splits each micro-batch on the rule DSL — valid
@@ -5675,14 +5487,10 @@ def stream_validate_dlq_oracle(spark, sf_dir):
     both committed sinks must equal the batch CASE-logic twin row-for-row:
     nothing dropped, nothing duplicated, every quarantined row explains
     itself (streaming/exactly_once.py:QuarantiningSink)."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
     from .streaming.exactly_once import ExactlyOnceSink
     from .validation import Validator
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_dlq_")
     stream = _documents_stream_source(spark, sf_dir, work).filter(
         F.col("doc_id") < 4_000_000_000
     )
@@ -5705,10 +5513,7 @@ def stream_validate_dlq_oracle(spark, sf_dir):
         F.lit("quarantined").alias("status"),
         F.array_join("_errors", "; ").alias("reason"),
     )
-    out = ok.unionByName(bad).orderBy("doc_id")
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return ok.unionByName(bad).orderBy("doc_id")
 
 
 @register(
@@ -5722,7 +5527,8 @@ def stream_validate_dlq_oracle(spark, sf_dir):
     ORDER BY key, lang
     """,
 )
-def stream_fanout_atomic_oracle(spark, sf_dir):
+@_scratch
+def stream_fanout_atomic_oracle(spark, sf_dir, work):
     """One stream, two tables, ONE commit per batch: documents replayed as a
     file stream through a FanoutSink writing (a) the per-doc projection and
     (b) a per-lang rollup under a single group ledger — the multi-table-
@@ -5732,13 +5538,9 @@ def stream_fanout_atomic_oracle(spark, sf_dir):
     committed tables must reconstruct the batch twin exactly: per-doc rows
     row-for-row, and the per-batch partial rollups summing to the global
     GROUP BY."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
     from .streaming.exactly_once import FanoutSink
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_fanout_")
     stream = _documents_stream_source(spark, sf_dir, work)
     real = F.col("doc_id") < 4_000_000_000  # exclude the heartbeat sentinel
     sink = FanoutSink(
@@ -5763,10 +5565,7 @@ def stream_fanout_atomic_oracle(spark, sf_dir):
         .agg(F.sum("n").alias("n"))
         .select(F.lit("lang").alias("key"), "lang", "n")
     )
-    out = docs.unionByName(langs).orderBy("key", "lang")
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return docs.unionByName(langs).orderBy("key", "lang")
 
 
 def _stream_curation_oracle_sql() -> str:
@@ -5794,7 +5593,8 @@ def _stream_curation_oracle_sql() -> str:
 
 
 @register("stream_curation_gate_oracle", _stream_curation_oracle_sql())
-def stream_curation_gate_oracle(spark, sf_dir):
+@_scratch
+def stream_curation_gate_oracle(spark, sf_dir, work):
     """The reference's fluent chain (read → Filter → Transform → Validate →
     Batch → Write, PipeFlow/Pipeline.cs:60-130) as ONE streaming pipeline,
     batch-equality proven: documents replayed as a file stream → language
@@ -5806,12 +5606,8 @@ def stream_curation_gate_oracle(spark, sf_dir):
     final windowed agg touches the state store, so state size tracks
     windows × sources, not throughput — the shape that survives a
     10^12-turn stream."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_curate_")
     stream = _documents_stream_source(spark, sf_dir, work)
     raw = F.col("__raw")
     sp = (
@@ -5834,15 +5630,12 @@ def stream_curation_gate_oracle(spark, sf_dir):
         )
         .select(F.col("w.start").alias("ws"), "source", "n_docs", "avg_q", *_PII_ALIASES)
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("source") != "__sentinel__")
         .select("ws", "source", "n_docs", "avg_q", *_PII_ALIASES)
         .orderBy("ws", "source")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -5922,7 +5715,8 @@ def gen_transcripts_profile(spark, sf_dir):
     ORDER BY doc_id
     """,
 )
-def stream_neardup_guard_oracle(spark, sf_dir):
+@_scratch
+def stream_neardup_guard_oracle(spark, sf_dir, work):
     """Streaming near-dup ingest guard (``streaming/neardup.py``): documents
     replayed in doc_id order across 4 arrival files; each micro-batch is
     novelty-gated against the accumulated SimHash signature store
@@ -5933,13 +5727,10 @@ def stream_neardup_guard_oracle(spark, sf_dir):
     ``dedup_clusters``/``keep_list`` path).  Committed kept set must equal
     the batch "no earlier doc within Hamming 3" anti-join."""
     import os as _os
-    import shutil
-    import tempfile
 
     from .streaming import StreamingPipeline
     from .streaming.neardup import NearDupGuardSink
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_nd_")
     docs = _t(spark, sf_dir, "documents")
     hi = docs.agg(F.max("doc_id")).first()[0]
     src = _os.path.join(work, "src")
@@ -5962,10 +5753,7 @@ def stream_neardup_guard_oracle(spark, sf_dir):
         query_name="neardup_guard",
     )
     q.awaitTermination()
-    out = guard.read_kept(spark).select("doc_id").orderBy("doc_id")
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return guard.read_kept(spark).select("doc_id").orderBy("doc_id")
 
 
 @register(
@@ -6019,7 +5807,8 @@ def stream_neardup_guard_oracle(spark, sf_dir):
     ORDER BY d.doc_id
     """,
 )
-def stream_span_guard_oracle(spark, sf_dir):
+@_scratch
+def stream_span_guard_oracle(spark, sf_dir, work):
     """STREAMING ExactSubstr guard (streaming/spanguard.py): documents arrive
     in doc_id order across 3 micro-batches; each batch's ≥12-token spans are
     judged against gram counts accumulated over history PLUS the batch
@@ -6030,12 +5819,9 @@ def stream_span_guard_oracle(spark, sf_dir):
     arrival batch reaches 2 — the prefix-semantics ExactSubstr: a span
     unique at commit time stays intact, its later re-occurrences are cut."""
     import os as _os
-    import shutil
-    import tempfile
 
     from .streaming import SpanGuardSink, StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_sg_")
     docs = _t(spark, sf_dir, "documents")
     n = docs.agg(F.max("doc_id") + 1).first()[0]
     src = _os.path.join(work, "src")
@@ -6052,14 +5838,11 @@ def stream_span_guard_oracle(spark, sf_dir):
         guard, _os.path.join(work, "ckpt"), query_name="span_guard"
     )
     q.awaitTermination()
-    out = (
+    return (
         guard.read_clean(spark)
         .select("doc_id", "n_tokens", "n_removed", "clean_text")
         .orderBy("doc_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -6076,7 +5859,8 @@ def stream_span_guard_oracle(spark, sf_dir):
     SELECT ws, event_type, n FROM r WHERE rk <= 2 ORDER BY ws, event_type
     """,
 )
-def stream_window_topk_oracle(spark, sf_dir):
+@_scratch
+def stream_window_topk_oracle(spark, sf_dir, work):
     """Exact top-k per closed window on a stream (``windowed_topk`` — the
     ``per_batch`` mechanism): tumbling hourly counts per event_type, then
     the top-2 types per window ranked INSIDE foreachBatch.  Correct because
@@ -6086,12 +5870,8 @@ def stream_window_topk_oracle(spark, sf_dir):
     exactly once.  Streaming can't rank in the plan (no window functions on
     unbounded input); ranking the CLOSED windows per batch is the scalable
     escape hatch.  Ties broken by event_type for replay determinism."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_tk_")
     sp = (
         StreamingPipeline(_events_stream_source(spark, sf_dir, work))
         .with_watermark("ts", "10 minutes")
@@ -6099,15 +5879,12 @@ def stream_window_topk_oracle(spark, sf_dir):
         .select(F.col("w.start").alias("ws"), "event_type", "n")
         .windowed_topk(["ws"], [F.col("n").desc(), F.col("event_type")], 2)
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("event_type") != "__sentinel__")
         .select("ws", "event_type", "n")
         .orderBy("ws", "event_type")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -6118,7 +5895,8 @@ def stream_window_topk_oracle(spark, sf_dir):
     FROM events GROUP BY 1 ORDER BY 1
     """,
 )
-def stream_multi_source_union_oracle(spark, sf_dir):
+@_scratch
+def stream_multi_source_union_oracle(spark, sf_dir, work):
     """Multi-source ingest merge: the events table split into TWO overlapping
     file streams (odd/even event_id, each side also carrying a slice of the
     other's rows — the duplicated-delivery shape of a mirrored Kafka topic or
@@ -6130,12 +5908,9 @@ def stream_multi_source_union_oracle(spark, sf_dir):
     op; the proof is that the COMPOSITION holds under exactly-once."""
     import datetime as _dt
     import os as _os
-    import shutil
-    import tempfile
 
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_mu_")
     batch = _t(spark, sf_dir, "events")
     srcs = []
     for side in (0, 1):
@@ -6175,15 +5950,12 @@ def stream_multi_source_union_oracle(spark, sf_dir):
         .tumbling_distinct_count("ts", "1 hour", [], "user_id", alias="n_users", count_alias="n")
         .select(F.col("w.start").alias("ws"), "n", "n_users")
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("ws") < "2099-01-01")
         .select("ws", "n", "n_users")
         .orderBy("ws")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -6245,7 +6017,8 @@ def budget_cap(spark, sf_dir):
 
 
 @register("stream_budget_cap_oracle", _BUDGET_ORACLE)
-def stream_budget_cap_oracle(spark, sf_dir):
+@_scratch
+def stream_budget_cap_oracle(spark, sf_dir, work):
     """The streaming twin of ``budget_cap``: a watermark-buffered
     ``applyInPandasWithState`` machine — a row is only judged once the
     watermark passes its event time (no earlier-ordered row can still
@@ -6253,18 +6026,14 @@ def stream_budget_cap_oracle(spark, sf_dir):
     total per key, so the spent-budget decision is identical to the batch
     window frame no matter how arrival interleaves.  Committed exactly-once
     output over the documents replay ≡ the batch twin."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_bc_")
     sp = (
         StreamingPipeline(_documents_stream_source(spark, sf_dir, work))
         .with_watermark("ts", "10 minutes")
         .budget_cap("ts", "source", "doc_id", "n_chars", 4000)
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("k") != "__sentinel__")
         .select(
@@ -6276,9 +6045,6 @@ def stream_budget_cap_oracle(spark, sf_dir):
         )
         .orderBy("source", "doc_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 _SPIKES_ORACLE = """
@@ -6316,7 +6082,8 @@ def turn_rate_spikes(spark, sf_dir):
 
 
 @register("stream_turn_rate_spikes_oracle", _SPIKES_ORACLE)
-def stream_turn_rate_spikes_oracle(spark, sf_dir):
+@_scratch
+def stream_turn_rate_spikes_oracle(spark, sf_dir, work):
     """The streaming twin of ``turn_rate_spikes``: an
     ``applyInPandasWithState`` machine (EventTimeTimeout) that buckets events
     into open tumbling windows and, as the watermark closes each bucket,
@@ -6326,18 +6093,14 @@ def stream_turn_rate_spikes_oracle(spark, sf_dir):
     full-history answer — the strongest equality the north rule asks for
     ("is this conversation suddenly hot?" answered identically online and
     offline)."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_spk_")
     sp = (
         StreamingPipeline(_events_stream_source(spark, sf_dir, work))
         .with_watermark("ts", "10 minutes")
         .tumbling_spikes("ts", 3_600_000_000, "user_id")
     )
-    out = (
+    return (
         _committed(spark, sp, f"{work}/sink", f"{work}/ckpt")
         .filter(F.col("k") >= 0)  # sentinel key is -1
         .select(
@@ -6346,9 +6109,6 @@ def stream_turn_rate_spikes_oracle(spark, sf_dir):
         )
         .orderBy("ws", "user_id")
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @register(
@@ -6365,36 +6125,28 @@ def stream_turn_rate_spikes_oracle(spark, sf_dir):
     ORDER BY event_type
     """,
 )
-def avro_roundtrip_events(spark, sf_dir):
+@_scratch
+def avro_roundtrip_events(spark, sf_dir, work):
     """Avro OCF round-trip (stdlib codec, `avro_py.py`): events → executor-
     encoded deflate part files → distributed decode → aggregate.  The oracle
     aggregates the original parquet table, so a green row proves the
     round-trip is value-exact (timestamps to the microsecond, doubles
     bit-for-bit) — the spark-avro-jar gap closed with from-scratch code."""
-    import shutil
-    import tempfile
-
     from .avro_py import read_avro, write_avro
 
-    work = tempfile.mkdtemp(prefix="pipeflow_avro_rt_")
-    try:
-        write_avro(_t(spark, sf_dir, "events"), work, codec="deflate")
-        back = read_avro(spark, work)
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").alias("n"),
-                F.countDistinct("user_id").alias("n_users"),
-                F.min("ts").alias("first_ts"),
-                F.max("ts").alias("last_ts"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
-            .orderBy("event_type")
+    write_avro(_t(spark, sf_dir, "events"), work, codec="deflate")
+    return (
+        read_avro(spark, work)
+        .groupBy("event_type")
+        .agg(
+            F.count("*").alias("n"),
+            F.countDistinct("user_id").alias("n_users"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        rows, schema = out.collect(), out.schema
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        .orderBy("event_type")
+    )
 
 
 @register(
@@ -6629,7 +6381,8 @@ def hist_quantiles_events(spark, sf_dir):
         ["ws", "event_type"],
     ),
 )
-def stream_hist_quantiles_oracle(spark, sf_dir):
+@_scratch
+def stream_hist_quantiles_oracle(spark, sf_dir, work):
     """Streaming twin of ``hist_quantiles_events``: the full micro-batch
     chain (file stream → watermark → stateful dedupe → tumbling histogram
     agg → exactly-once sink) keeps per-window state at BUCKET granularity
@@ -6637,12 +6390,8 @@ def stream_hist_quantiles_oracle(spark, sf_dir):
     10^12-turn-safe windowed-percentile design), then the committed bucket
     rows reconstruct p50/p95/p99 offline.  Oracle: the identical integer
     pipeline as one batch SQL over the same events."""
-    import shutil
-    import tempfile
-
     from .streaming import StreamingPipeline
 
-    work = tempfile.mkdtemp(prefix="pipeflow_stream_hq_")
     bid, ub = quantile.bucket_cols("x")
     sp = (
         StreamingPipeline(_events_stream_source(spark, sf_dir, work))
@@ -6663,12 +6412,9 @@ def stream_hist_quantiles_oracle(spark, sf_dir):
         .filter(F.col("event_type") != "__sentinel__")
         .select("ws", "event_type", "bid", "cnt", "ub")
     )
-    out = quantile.quantiles_from_buckets(buckets, ["ws", "event_type"]).orderBy(
+    return quantile.quantiles_from_buckets(buckets, ["ws", "event_type"]).orderBy(
         "ws", "event_type"
     )
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..pipeline import Pipeline
 from .exactly_once import ExactlyOnceSink
 
 TRANSCRIPT_SCHEMA = T.StructType(
@@ -153,23 +154,13 @@ class StreamingPipeline:
 
         return _fn
 
-    # -- stateless stages (vectorized, same semantics as batch Pipeline) --------
-    def filter(self, cond: Column | str) -> "StreamingPipeline":
-        cond = F.expr(cond) if isinstance(cond, str) else cond
-        return self._wrap(self._df.filter(cond))
+    # -- stateless stages (vectorized, the batch Pipeline's own bodies) ---------
+    filter = Pipeline.filter
+    add_column = Pipeline.add_column
+    transform_pandas = Pipeline.transform_pandas
 
     def select(self, *cols) -> "StreamingPipeline":
         return self._wrap(self._df.select(*cols))
-
-    def add_column(self, name: str, expr: Column) -> "StreamingPipeline":
-        return self._wrap(self._df.withColumn(name, expr))
-
-    def transform_pandas(self, fn, schema: str) -> "StreamingPipeline":
-        def _op(it):
-            for pdf in it:
-                yield fn(pdf)
-
-        return self._wrap(self._df.mapInPandas(_op, schema=schema))
 
     # -- event time ---------------------------------------------------------------
     def with_watermark(self, ts_col: str, delay: str) -> "StreamingPipeline":

@@ -121,6 +121,34 @@ class BatchLedger:
         return new_hw
 
 
+def _batch_dir_ids(data_dir: str) -> list[int]:
+    """Sorted batch ids with a ``batch_id=N`` dir under ``data_dir`` —
+    O(#dirs), which data compaction keeps bounded; the read paths iterate
+    this instead of every id from 0 to the high-water mark."""
+    if not os.path.isdir(data_dir):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1]) for d in os.listdir(data_dir) if d.startswith("batch_id=")
+    )
+
+
+def _committed_metrics(metrics_dir: str, ledger: BatchLedger) -> list[dict]:
+    """The ``N.json`` per-batch metrics of ``ledger``-committed batches,
+    ascending by batch id — iterates the metric FILES on disk (O(#files)),
+    not every id up to the high-water mark."""
+    if not os.path.isdir(metrics_dir):
+        return []
+    ids = sorted(
+        int(f[:-5]) for f in os.listdir(metrics_dir) if f.endswith(".json") and f[:-5].isdigit()
+    )
+    out = []
+    for b in ids:
+        if ledger.is_committed(b):
+            with open(os.path.join(metrics_dir, f"{b}.json")) as f:
+                out.append(json.load(f))
+    return out
+
+
 class ExactlyOnceSink:
     """Idempotent per-batch parquet committer.
 
@@ -153,18 +181,6 @@ class ExactlyOnceSink:
     def compact_ledger(self, keep_last: int = 100) -> int:
         """See :meth:`BatchLedger.compact`."""
         return self._ledger.compact(keep_last)
-
-    def _data_batch_ids(self) -> list[int]:
-        """Sorted batch ids with a data dir on disk — O(#dirs), which data
-        compaction keeps bounded; the read paths iterate this instead of
-        every id from 0 to the high-water mark."""
-        if not os.path.isdir(self.data_dir):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.data_dir)
-            if d.startswith("batch_id=")
-        )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         """The ``foreachBatch`` hook."""
@@ -255,7 +271,7 @@ class ExactlyOnceSink:
         # compactions) rather than probing every id in (prev, target]
         covered = [
             os.path.join(self.data_dir, f"batch_id={b}")
-            for b in self._data_batch_ids()
+            for b in _batch_dir_ids(self.data_dir)
             if prev < b <= target
         ]
         sources += covered
@@ -296,7 +312,7 @@ class ExactlyOnceSink:
             dirs.append(seg)
         dirs += [
             os.path.join(self.data_dir, f"batch_id={b}")
-            for b in self._data_batch_ids()
+            for b in _batch_dir_ids(self.data_dir)
             if b > through and self.is_committed(b)
         ]
         if not dirs:
@@ -304,23 +320,8 @@ class ExactlyOnceSink:
         return spark.read.parquet(*dirs)
 
     def metrics(self) -> list[dict]:
-        """Per-batch metrics for committed batches, ascending by batch id —
-        iterates the metric FILES on disk (O(#files)), not every id up to
-        the high-water mark."""
-        if not os.path.isdir(self.metrics_dir):
-            return []
-        ids = sorted(
-            int(f[:-5])
-            for f in os.listdir(self.metrics_dir)
-            if f.endswith(".json") and f[:-5].isdigit()
-        )
-        out = []
-        for b in ids:
-            if not self.is_committed(b):
-                continue
-            with open(os.path.join(self.metrics_dir, f"{b}.json")) as f:
-                out.append(json.load(f))
-        return out
+        """Per-batch metrics for committed batches, ascending by batch id."""
+        return _committed_metrics(self.metrics_dir, self._ledger)
 
     def lineage(self, spark) -> DataFrame:
         """The per-partition lineage ledger as a queryable DataFrame — one
@@ -441,16 +442,7 @@ class FanoutSink:
         """Snapshot view of one table over group-committed batches only."""
         if name not in self.outputs:
             raise KeyError(f"unknown fanout table {name!r}")
-        ddir = os.path.join(self.root, name, "data")
-        ids = (
-            sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(ddir)
-                if d.startswith("batch_id=")
-            )
-            if os.path.isdir(ddir)
-            else []
-        )
+        ids = _batch_dir_ids(os.path.join(self.root, name, "data"))
         dirs = [self._part_dir(name, b) for b in ids if self._ledger.is_committed(b)]
         if not dirs:
             raise ValueError(f"no committed batches for table {name!r}")
@@ -459,23 +451,7 @@ class FanoutSink:
     def metrics(self, name: str) -> list[dict]:
         if name not in self.outputs:  # fail fast, same contract as read_committed
             raise KeyError(f"unknown fanout table {name!r}")
-        out = []
-        mdir = os.path.join(self.root, name, "_metrics")
-        ids = (
-            sorted(
-                int(f[:-5])
-                for f in os.listdir(mdir)
-                if f.endswith(".json") and f[:-5].isdigit()
-            )
-            if os.path.isdir(mdir)
-            else []
-        )
-        for b in ids:
-            if not self._ledger.is_committed(b):
-                continue
-            with open(os.path.join(mdir, f"{b}.json")) as f:
-                out.append(json.load(f))
-        return out
+        return _committed_metrics(os.path.join(self.root, name, "_metrics"), self._ledger)
 
 
 class QuarantiningSink:

@@ -2255,3 +2255,41 @@ def test_stream_e2e_pins_match_batch_derivation():
     got2 = set(map(tuple, oracle2.itertuples(index=False)))
     want2 = set(map(tuple, jn[["conv_id", "n_pairs", "last_reply_turn"]].itertuples(index=False)))
     assert got2 == want2
+
+
+def test_failed_registry_stream_query_removes_its_scratch_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A registry stream query that fails after its source is staged still
+    removes its scratch dir (checkpoint, sink, symlinked source) and restores
+    the session's shuffle partitions.  The failure is injected at the stream
+    start, inside the state-partition pin, so no stream runs."""
+    import tempfile
+
+    from pipeflow_spark.queries import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    staged = []
+
+    def fail_start(self, sink, checkpoint_dir, **kwargs):
+        staged.extend(tmp_path.glob("pipeflow_*/src/part-99999.parquet"))
+        raise RuntimeError("injected stream failure")
+
+    monkeypatch.setattr(StreamingPipeline, "start_exactly_once", fail_start)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        with pytest.raises(RuntimeError, match="injected stream failure"):
+            QUERIES["stream_events_tumbling_oracle"][0](spark, sf_dir)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert len(staged) == 1  # the failure came after the source was written
+    assert list(tmp_path.glob("pipeflow_*")) == []
+
+
+def test_streaming_add_column_takes_a_sql_string(spark):
+    """StreamingPipeline shares the batch Pipeline's stateless stages, so
+    ``add_column`` and ``filter`` accept SQL strings on a stream too."""
+    sp = StreamingPipeline(spark.readStream.format("rate").load())
+    out = sp.add_column("twice", "value * 2").filter("twice > 0")
+    assert isinstance(out, StreamingPipeline)
+    assert out.df.isStreaming and out.df.columns == ["timestamp", "value", "twice"]
