@@ -111,19 +111,18 @@ def bench_stream(spark, trials: int | None = None) -> dict[str, float]:
     from pipeflow_spark.streaming import ExactlyOnceSink
 
     trials = trials or int(os.environ.get("SPARK_GRAFT_STREAM_TRIALS", "2"))
-    work = tempfile.mkdtemp(prefix="pipeflow_bench_")
-    src = os.path.join(work, "src")
-    pdf = chain.synthesize(42, n_convs=30000, n_files=8)
-    chain.write_files(pdf, src)
-    n_turns = len(pdf)
-
     # stateful-op state partitions are sized independently of core count
     # (checkpoint-fixed in production); 16 keeps per-batch state-store
     # overhead low while still saturating the cores in waves
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
     best: dict[str, float] | None = None
+    work = tempfile.mkdtemp(prefix="pipeflow_bench_")
     try:
+        src = os.path.join(work, "src")
+        pdf = chain.synthesize(42, n_convs=30000, n_files=8)
+        chain.write_files(pdf, src)
+        n_turns = len(pdf)
+        spark.conf.set("spark.sql.shuffle.partitions", "16")
         for trial in range(trials):
             root = os.path.join(work, f"sink{trial}")
             ckpt = os.path.join(work, f"ckpt{trial}")
@@ -148,7 +147,7 @@ def bench_stream(spark, trials: int | None = None) -> dict[str, float]:
                 best = result
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
     return best
 
 

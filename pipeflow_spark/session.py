@@ -4,7 +4,10 @@ The engine targets a multi-executor cluster reading ~100 TB; in this sandbox it
 runs ``local[N]`` (single JVM).  All confs below are safe on both: shuffle
 partitioning scales with parallelism, AQE re-plans at runtime (coalesce /
 skew-join), Arrow is on for every pandas-UDF stage, and the session timezone is
-pinned to UTC so results compare bit-for-bit against the DuckDB oracle.
+pinned to UTC so results compare bit-for-bit against the DuckDB oracle.  One
+conf is local-only: ``spark.sql.streaming.checkpointFileManagerClass`` is set to
+the FileSystem-based manager when the master is ``local…`` (see ``get_spark``);
+a cluster master keeps Spark's FileContext default.
 """
 
 from __future__ import annotations
@@ -41,8 +44,9 @@ def get_spark(
     partitions come out small, so erring high is safe there).
     """
     n = cpus or DEFAULT_CPUS
+    master = master or f"local[{n}]"
     builder = (
-        SparkSession.builder.master(master or f"local[{n}]")
+        SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
         .config("spark.sql.adaptive.enabled", "true")
@@ -93,12 +97,34 @@ def get_spark(
         .config("spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB", "64")
         .config("spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB", "64")
         # NOT set here: rocksdb.trackTotalNumberOfRows=false removes the
-        # read-before-write that maintains numRowsTotal — measured −29 % on
-        # the dedupe store's update time and −7 % full-chain wall (BENCH.md
-        # §1-quater, tools/stream_phase_audit.py) — but blinds rows-in-state
-        # observability.  Default stays true; flip it per-session for
-        # throughput-critical dedupe-heavy chains.
+        # read-before-write that maintains numRowsTotal — measured −31 % on
+        # the dedupe store's update time and −20 % full-chain wall at
+        # local[4] (BENCH.md §1-quater, tools/stream_phase_audit.py) — but
+        # blinds rows-in-state observability.  Default stays true; flip it
+        # per-session for throughput-critical dedupe-heavy chains.
     )
+    if master.startswith("local"):
+        # Checkpoint renames (offset and commit logs on the driver, RocksDB
+        # changelogs on the executors) go through FileSystem.rename, which on
+        # the local filesystem is File.renameTo.  Spark's FileContext default
+        # checks link status before each rename, and without libhadoop every
+        # check forks `readlink`: 160 processes per micro-batch of the bench
+        # chain (BENCH.md §7).  No atomicity is lost on local disk, where
+        # FileContext's rename is check-then-rename too (hadoop-client-api
+        # 3.4.2, javap):
+        #   AbstractFileSystem.renameInternal(src, dst, overwrite)
+        #     getFileLinkStatus(src), getFileLinkStatus(dst): throw if dst exists
+        #     DelegateToFileSystem.renameInternal -> FileSystem.rename(src, dst, opts)
+        #       -> RawLocalFileSystem.rename -> java.io.File.renameTo
+        # and the FileSystem manager's renameTempFile is
+        #   if (!overwrite && fs.exists(dst)) throw; fs.rename(src, dst)
+        # A cluster master keeps the FileContext manager: HDFS renames
+        # atomically without overwrite there.
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     # Iceberg config flip (SURVEY §7.0 / catalog.py): one command online —
     #   PIPEFLOW_ICEBERG_WAREHOUSE=/path/to/wh python <job>.py
     # resolves the Iceberg Spark runtime via spark.jars.packages (needs

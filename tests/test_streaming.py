@@ -1282,6 +1282,141 @@ def test_exactly_once_replay_committed_is_noop(spark, clean_dir, tmp_path):
     assert before == after
 
 
+_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_CKPT_MANAGER_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _checkpoint_manager(spark, path, hadoop_conf):
+    """The CheckpointFileManager Spark builds for ``path`` under ``hadoop_conf``."""
+    jvm = spark.sparkContext._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)), hadoop_conf)
+
+
+def _process_starts(spark, path, run):
+    """Commands of the processes the JVM forks while ``run()`` executes,
+    from a JFR recording of ``jdk.ProcessStart`` events."""
+    jvm = spark.sparkContext._jvm
+    rec = jvm.jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try:
+        run()
+    finally:
+        rec.stop()
+        out = jvm.java.nio.file.Paths.get(
+            str(path), spark.sparkContext._gateway.new_array(jvm.java.lang.String, 0))
+        rec.dump(out)
+        rec.close()
+    return [str(e.getString("command")).split()[0]
+            for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(out)]
+
+
+def test_local_stream_checkpoint_renames_fork_no_readlink(spark, tmp_path):
+    """A local session commits offsets, commits and RocksDB changelogs
+    through the FileSystem checkpoint manager, whose rename is
+    ``File.renameTo``.  The FileContext manager forks ``readlink`` for each
+    path it checks on every rename when libhadoop is absent."""
+    pdf = synthesize_transcripts(n_convs=10, n_files=1, seed=3, late_frac=0.0)
+    d = str(tmp_path / "src")
+    write_arrival_files(pdf, d)
+    write_sentinel_file(d, SENTINEL_TS)
+    sink = ExactlyOnceSink(str(tmp_path / "sink"))
+
+    def run():
+        _windowed(spark, d).start_exactly_once(
+            sink, str(tmp_path / "ckpt"), output_mode="append").awaitTermination()
+        # control: a fork inside the window is recorded
+        spark.sparkContext._jvm.java.lang.ProcessBuilder(["true"]).start().waitFor()
+
+    starts = _process_starts(spark, tmp_path / "starts.jfr", run)
+    assert "true" in starts
+    assert len(sink.committed_batches()) >= 2
+    assert starts.count("readlink") == 0, sorted(set(starts))
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    assert _checkpoint_manager(spark, tmp_path, conf).getClass().getSimpleName() == (
+        "FileSystemBasedCheckpointFileManager")
+
+
+def test_cluster_master_keeps_filecontext_checkpoint_manager(monkeypatch):
+    """Only a local master gets the FileSystem checkpoint manager; HDFS
+    renames atomically without overwrite through Spark's FileContext one."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import SparkSession
+
+    from pipeflow_spark.session import get_spark
+
+    built = []
+
+    def capture(builder):
+        built.append(dict(builder._options))
+        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    get_spark(master="spark://cluster:7077")
+    get_spark(master="local[2]")
+    assert _CKPT_MANAGER_CONF not in built[0]
+    assert built[1][_CKPT_MANAGER_CONF] == _CKPT_MANAGER_PKG + "FileSystemBasedCheckpointFileManager"
+
+
+@pytest.mark.parametrize("manager", ["FileSystemBasedCheckpointFileManager",
+                                     "FileContextBasedCheckpointFileManager"])
+def test_checkpoint_create_atomic_keeps_no_overwrite_guard(spark, tmp_path, manager):
+    """HDFSMetadataLog detects a concurrent writer of the same batch by
+    ``createAtomic(path, overwriteIfPossible=false)`` failing at close; both
+    managers keep that guard, and the first writer's file survives."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark.sparkContext._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    conf.set(_CKPT_MANAGER_CONF, _CKPT_MANAGER_PKG + manager)
+    mgr = _checkpoint_manager(spark, tmp_path, conf)
+    assert mgr.getClass().getSimpleName() == manager
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    first = mgr.createAtomic(path, True)
+    first.write(bytearray(b"first"))
+    first.close()
+    second = mgr.createAtomic(path, False)
+    second.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError) as err:
+        second.close()
+    assert jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException").isInstance(err.value.java_exception)
+    assert (tmp_path / "0").read_bytes() == b"first"
+
+
+def test_filecontext_checkpoint_resumes_under_local_default(spark, clean_dir, tmp_path):
+    """A checkpoint written by Spark's FileContext manager (crashed between
+    sink write and ledger commit) resumes under the local session's
+    FileSystem manager with exactly-once output."""
+    d, pdf = clean_dir
+    root, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    local_default = spark.conf.get(_CKPT_MANAGER_CONF, None)
+    spark.conf.set(_CKPT_MANAGER_CONF, _CKPT_MANAGER_PKG + "FileContextBasedCheckpointFileManager")
+    try:
+        q = _windowed(spark, d).start_exactly_once(
+            ExactlyOnceSink(root, fail_after_write_batch_id=2), ckpt, output_mode="append")
+        with pytest.raises(Exception, match="injected failure"):
+            q.awaitTermination()
+    finally:
+        if local_default is None:
+            spark.conf.unset(_CKPT_MANAGER_CONF)
+        else:
+            spark.conf.set(_CKPT_MANAGER_CONF, local_default)
+
+    sink = ExactlyOnceSink(root)
+    _windowed(spark, d).start_exactly_once(sink, ckpt, output_mode="append").awaitTermination()
+    rows = [(r.ws, r.conv_id, r.n, r.max_turn) for r in sink.read_committed(spark).collect()]
+    assert len(rows) == len(set(rows))  # no batch landed twice
+    assert {(ws, c): (n, m) for ws, c, n, m in rows} == _batch_oracle(spark, pdf)
+    batches = sink.committed_batches()
+    assert batches == list(range(len(batches))) and 2 in batches
+    assert [m["batch_id"] for m in sink.metrics()] == batches
+    commits = sorted(int(f) for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit())
+    assert commits == list(range(len(commits))) and len(commits) >= len(batches)
+
+
 def test_tool_loop_detector_cep(spark, tmp_path):
     """Per-conv tool-loop CEP over per-key state — a run of consecutive tool
     turns split ACROSS arrival files must still be detected (state crosses

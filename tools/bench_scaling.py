@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -111,40 +112,40 @@ def run_one(cpus: int, src: str, n_turns: int) -> dict:
     spark.range(1000).selectExpr("sum(id)").collect()  # warm executors
 
     work = tempfile.mkdtemp(prefix=f"pipeflow_scale_{cpus}_")
-    job = os.environ.get("SPARK_GRAFT_JOB", "full")  # full | nodedupe | stateless
+    try:
+        job = os.environ.get("SPARK_GRAFT_JOB", "full")  # full | nodedupe | stateless
 
-    # JIT warmup: run the identical plan shape on a tiny input first so the
-    # generated classes are compiled and cached on driver+executors before the
-    # timed run — steady-state throughput is the metric (a 10^12-turn stream
-    # amortizes JIT to zero), not cold-start.
-    from pipeflow_spark.streaming.transcripts import synthesize_transcripts
+        # JIT warmup: run the identical plan shape on a tiny input first so the
+        # generated classes are compiled and cached on driver+executors before the
+        # timed run — steady-state throughput is the metric (a 10^12-turn stream
+        # amortizes JIT to zero), not cold-start.
+        from pipeflow_spark.streaming.transcripts import synthesize_transcripts
 
-    wsrc = os.path.join(work, "warm_src")
-    chain.write_files(synthesize_transcripts(n_convs=200, n_files=2, seed=7, late_frac=0.0), wsrc)
-    wsink = ExactlyOnceSink(os.path.join(work, "warm_sink"))
-    wq = _build_chain(spark, wsrc, job).start_exactly_once(
-        wsink, os.path.join(work, "warm_ckpt"), output_mode="append"
-    )
-    wq.awaitTermination()
-    # settle: let the host's CPU burst credits refill after the warmup burn
-    # (JIT caches survive the pause; see BENCH.md host caveat)
-    time.sleep(int(os.environ.get("SPARK_GRAFT_SETTLE", "60")))
+        wsrc = os.path.join(work, "warm_src")
+        chain.write_files(synthesize_transcripts(n_convs=200, n_files=2, seed=7, late_frac=0.0), wsrc)
+        wsink = ExactlyOnceSink(os.path.join(work, "warm_sink"))
+        wq = _build_chain(spark, wsrc, job).start_exactly_once(
+            wsink, os.path.join(work, "warm_ckpt"), output_mode="append"
+        )
+        wq.awaitTermination()
+        # settle: let the host's CPU burst credits refill after the warmup burn
+        # (JIT caches survive the pause; see BENCH.md host caveat)
+        time.sleep(int(os.environ.get("SPARK_GRAFT_SETTLE", "60")))
 
-    sink = ExactlyOnceSink(os.path.join(work, "sink"))
-    sp = _build_chain(spark, src, job)
-    t0 = time.monotonic()
-    q = sp.start_exactly_once(sink, os.path.join(work, "ckpt"), output_mode="append")
-    q.awaitTermination()
-    wall = time.monotonic() - t0
-    out_rows = sum(m["rows"] for m in sink.metrics())
-    phases: dict[str, float] = {}
-    for p in q.recentProgress:
-        for k, v in p["durationMs"].items():
-            phases[k] = phases.get(k, 0.0) + v / 1000.0
-    spark.stop()
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
+        sink = ExactlyOnceSink(os.path.join(work, "sink"))
+        sp = _build_chain(spark, src, job)
+        t0 = time.monotonic()
+        q = sp.start_exactly_once(sink, os.path.join(work, "ckpt"), output_mode="append")
+        q.awaitTermination()
+        wall = time.monotonic() - t0
+        out_rows = sum(m["rows"] for m in sink.metrics())
+        phases: dict[str, float] = {}
+        for p in q.recentProgress:
+            for k, v in p["durationMs"].items():
+                phases[k] = phases.get(k, 0.0) + v / 1000.0
+        spark.stop()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
     return {
         "cpus": cpus,
         "turns": n_turns,
@@ -231,53 +232,53 @@ def main() -> None:
 
     ensure_cluster()
     work = tempfile.mkdtemp(prefix="pipeflow_scaling_input_")
-    src, n_turns = build_input(work)
-    env = dict(os.environ, SPARK_GRAFT_MASTER_URL=MASTER_URL)
-    trials: dict[int, list[dict]] = {c: [] for c in SIZES}
-    # interleave sizes across trials so host-load drift biases neither size;
-    # idle between runs — the sandbox host throttles sustained parallel CPU
-    # (burst credits), and cooldown lets each trial start unthrottled
-    cooldown = int(os.environ.get("SPARK_GRAFT_COOLDOWN", "90"))
-    for _ in range(TRIALS):
-        for cpus in SIZES:
-            time.sleep(cooldown)
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--run", str(cpus), src, str(n_turns)],
-                capture_output=True,
-                text=True,
-                cwd=REPO,
-                env=env,
-                timeout=1800,
+    try:
+        src, n_turns = build_input(work)
+        env = dict(os.environ, SPARK_GRAFT_MASTER_URL=MASTER_URL)
+        trials: dict[int, list[dict]] = {c: [] for c in SIZES}
+        # interleave sizes across trials so host-load drift biases neither size;
+        # idle between runs — the sandbox host throttles sustained parallel CPU
+        # (burst credits), and cooldown lets each trial start unthrottled
+        cooldown = int(os.environ.get("SPARK_GRAFT_COOLDOWN", "90"))
+        for _ in range(TRIALS):
+            for cpus in SIZES:
+                time.sleep(cooldown)
+                proc = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), "--run", str(cpus), src, str(n_turns)],
+                    capture_output=True,
+                    text=True,
+                    cwd=REPO,
+                    env=env,
+                    timeout=1800,
+                )
+                line = next((l for l in proc.stdout.splitlines() if l.startswith("RESULT ")), None)
+                if line is None:
+                    sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-4000:])
+                    raise SystemExit(f"worker {cpus} cores failed")
+                trials[cpus].append(json.loads(line[len("RESULT "):]))
+
+        best = {c: max(ts, key=lambda r: r["turns_per_sec"]) for c, ts in trials.items()}
+        n, n4 = SIZES
+        assert best[n]["out_rows"] == best[n4]["out_rows"], "output mismatch across cluster sizes"
+        print(
+            json.dumps(
+                {
+                    "job": os.environ.get("SPARK_GRAFT_JOB", "full")
+                    + ": profile->watermark->dedupe->tumbling_agg->exactly_once_sink",
+                    "cluster": f"standalone, executors of {os.environ.get('SPARK_GRAFT_EXEC_CORES', '1')} core(s) each (separate JVMs)",
+                    "input_turns": n_turns,
+                    "n_cores": {"cores": n, "best": best[n], "all_trials": [t["turns_per_sec"] for t in trials[n]]},
+                    "n4_cores": {"cores": n4, "best": best[n4], "all_trials": [t["turns_per_sec"] for t in trials[n4]]},
+                    "scaling_efficiency": round(
+                        # efficiency = throughput ratio / core ratio (works for any
+                        # SPARK_GRAFT_SIZES pair, not just 4x)
+                        best[n4]["turns_per_sec"] / ((n4 / n) * best[n]["turns_per_sec"]), 3
+                    ),
+                }
             )
-            line = next((l for l in proc.stdout.splitlines() if l.startswith("RESULT ")), None)
-            if line is None:
-                sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-4000:])
-                raise SystemExit(f"worker {cpus} cores failed")
-            trials[cpus].append(json.loads(line[len("RESULT "):]))
-
-    best = {c: max(ts, key=lambda r: r["turns_per_sec"]) for c, ts in trials.items()}
-    n, n4 = SIZES
-    assert best[n]["out_rows"] == best[n4]["out_rows"], "output mismatch across cluster sizes"
-    print(
-        json.dumps(
-            {
-                "job": os.environ.get("SPARK_GRAFT_JOB", "full")
-                + ": profile->watermark->dedupe->tumbling_agg->exactly_once_sink",
-                "cluster": f"standalone, executors of {os.environ.get('SPARK_GRAFT_EXEC_CORES', '1')} core(s) each (separate JVMs)",
-                "input_turns": n_turns,
-                "n_cores": {"cores": n, "best": best[n], "all_trials": [t["turns_per_sec"] for t in trials[n]]},
-                "n4_cores": {"cores": n4, "best": best[n4], "all_trials": [t["turns_per_sec"] for t in trials[n4]]},
-                "scaling_efficiency": round(
-                    # efficiency = throughput ratio / core ratio (works for any
-                    # SPARK_GRAFT_SIZES pair, not just 4x)
-                    best[n4]["turns_per_sec"] / ((n4 / n) * best[n]["turns_per_sec"]), 3
-                ),
-            }
         )
-    )
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

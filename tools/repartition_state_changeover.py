@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -148,81 +149,84 @@ def main() -> int:
     )
 
     work = tempfile.mkdtemp(prefix="rsc_")
-    full = os.path.join(work, "full")
-    pdf = synthesize_transcripts(n_convs=60, n_files=6, seed=42, late_frac=0.0)
-    files = write_arrival_files(pdf, full)
+    try:
+        full = os.path.join(work, "full")
+        pdf = synthesize_transcripts(n_convs=60, n_files=6, seed=42, late_frac=0.0)
+        files = write_arrival_files(pdf, full)
 
-    # run 1 sees only the head of the corpus (an in-flight stream stopped
-    # mid-ingest); NO sentinel — the open tail windows are the point
-    head, tail_candidates = files[:3], files
-    stage1 = os.path.join(work, "stage1")
-    os.makedirs(stage1)
-    for f in head:
-        os.symlink(f, os.path.join(stage1, os.path.basename(f)))
-    r1 = _run_child(
-        {
-            "RSC_DATA": stage1,
-            "RSC_ROOT": os.path.join(work, "sink1"),
-            "RSC_CKPT": os.path.join(work, "ckpt1"),
-            "RSC_CPUS": "8",
+        # run 1 sees only the head of the corpus (an in-flight stream stopped
+        # mid-ingest); NO sentinel — the open tail windows are the point
+        head, tail_candidates = files[:3], files
+        stage1 = os.path.join(work, "stage1")
+        os.makedirs(stage1)
+        for f in head:
+            os.symlink(f, os.path.join(stage1, os.path.basename(f)))
+        r1 = _run_child(
+            {
+                "RSC_DATA": stage1,
+                "RSC_ROOT": os.path.join(work, "sink1"),
+                "RSC_CKPT": os.path.join(work, "ckpt1"),
+                "RSC_CPUS": "8",
+            }
+        )
+        state1 = _state_partitions(os.path.join(work, "ckpt1"))
+
+        # safe replay horizon from run 1's final watermark: open windows start at
+        # window_start(wm); one extra window of slack absorbs the close-boundary
+        # (< vs <=) semantics, which the recompute-consistency check then pins
+        wm = pd.Timestamp(r1["watermark"])
+        if wm.tzinfo is not None:  # progress reports ...Z; file ts are naive UTC
+            wm = wm.tz_convert("UTC").tz_localize(None)
+        horizon = wm.floor(f"{WINDOW_SEC}s") - pd.Timedelta(seconds=WINDOW_SEC)
+
+        def _max_ts(f):  # arrival files are time-sorted chunks → max ts = last row
+            t = pq.read_table(f, columns=["ts"]).column("ts").to_pylist()
+            return pd.Timestamp(t[-1]) if t else pd.Timestamp.min
+
+        replay = [f for f in tail_candidates if _max_ts(f) >= horizon]
+        stage2 = os.path.join(work, "stage2")
+        os.makedirs(stage2)
+        for f in replay:
+            os.symlink(f, os.path.join(stage2, os.path.basename(f)))
+        write_sentinel_file(stage2, pd.Timestamp(SENTINEL_TS).to_pydatetime())
+
+        r2 = _run_child(
+            {
+                "RSC_DATA": stage2,
+                "RSC_ROOT": os.path.join(work, "sink2"),
+                "RSC_CKPT": os.path.join(work, "ckpt2"),
+                "RSC_CPUS": "32",
+                "RSC_FULL_DATA": full,
+                "RSC_PREV_SINK": os.path.join(work, "sink1"),
+                # same "YYYY-MM-DD HH:MM:SS" shape as str(datetime) in the child,
+                # so the lexicographic >= is chronological
+                "RSC_HORIZON": str(horizon),
+            }
+        )
+        state2 = _state_partitions(os.path.join(work, "ckpt2"))
+
+        checks = {
+            "run1_closed_some_windows": r2["run1_pairs"] > 0,
+            "run1_left_windows_open": r2["run2_pairs"] > r2["overlap_pairs"],
+            "replay_bounded": len(replay) < len(files),
+            "recompute_consistent_on_overlap": r2["recompute_consistent"],
+            "stitched_equals_full_batch_oracle": r2["stitched_equals_oracle"],
+            "state_partitions_8_then_32": state1 == 8 and state2 == 32,
+            "run1_no_spurious_windows": r2["run1_subset_of_oracle"],
         }
-    )
-    state1 = _state_partitions(os.path.join(work, "ckpt1"))
-
-    # safe replay horizon from run 1's final watermark: open windows start at
-    # window_start(wm); one extra window of slack absorbs the close-boundary
-    # (< vs <=) semantics, which the recompute-consistency check then pins
-    wm = pd.Timestamp(r1["watermark"])
-    if wm.tzinfo is not None:  # progress reports ...Z; file ts are naive UTC
-        wm = wm.tz_convert("UTC").tz_localize(None)
-    horizon = wm.floor(f"{WINDOW_SEC}s") - pd.Timedelta(seconds=WINDOW_SEC)
-
-    def _max_ts(f):  # arrival files are time-sorted chunks → max ts = last row
-        t = pq.read_table(f, columns=["ts"]).column("ts").to_pylist()
-        return pd.Timestamp(t[-1]) if t else pd.Timestamp.min
-
-    replay = [f for f in tail_candidates if _max_ts(f) >= horizon]
-    stage2 = os.path.join(work, "stage2")
-    os.makedirs(stage2)
-    for f in replay:
-        os.symlink(f, os.path.join(stage2, os.path.basename(f)))
-    write_sentinel_file(stage2, pd.Timestamp(SENTINEL_TS).to_pydatetime())
-
-    r2 = _run_child(
-        {
-            "RSC_DATA": stage2,
-            "RSC_ROOT": os.path.join(work, "sink2"),
-            "RSC_CKPT": os.path.join(work, "ckpt2"),
-            "RSC_CPUS": "32",
-            "RSC_FULL_DATA": full,
-            "RSC_PREV_SINK": os.path.join(work, "sink1"),
-            # same "YYYY-MM-DD HH:MM:SS" shape as str(datetime) in the child,
-            # so the lexicographic >= is chronological
-            "RSC_HORIZON": str(horizon),
+        summary = {
+            "ok": all(bool(v) for v in checks.values()),
+            "checks": checks,
+            "replay_files": len(replay),
+            "total_files": len(files),
+            "run1": r1,
+            "run2": r2,
+            "state_partitions": {"run1": state1, "run2": state2},
         }
-    )
-    state2 = _state_partitions(os.path.join(work, "ckpt2"))
-
-    checks = {
-        "run1_closed_some_windows": r2["run1_pairs"] > 0,
-        "run1_left_windows_open": r2["run2_pairs"] > r2["overlap_pairs"],
-        "replay_bounded": len(replay) < len(files),
-        "recompute_consistent_on_overlap": r2["recompute_consistent"],
-        "stitched_equals_full_batch_oracle": r2["stitched_equals_oracle"],
-        "state_partitions_8_then_32": state1 == 8 and state2 == 32,
-        "run1_no_spurious_windows": r2["run1_subset_of_oracle"],
-    }
-    summary = {
-        "ok": all(bool(v) for v in checks.values()),
-        "checks": checks,
-        "replay_files": len(replay),
-        "total_files": len(files),
-        "run1": r1,
-        "run2": r2,
-        "state_partitions": {"run1": state1, "run2": state2},
-    }
-    print(json.dumps(summary))
-    return 0 if summary["ok"] else 1
+        print(json.dumps(summary))
+        return 0 if summary["ok"] else 1
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -123,38 +124,41 @@ def main() -> int:
     )
 
     work = tempfile.mkdtemp(prefix="rap_")
-    data, root, ckpt = (os.path.join(work, d) for d in ("data", "sink", "ckpt"))
-    pdf = synthesize_transcripts(n_convs=60, n_files=6, seed=42, late_frac=0.0)
-    write_arrival_files(pdf, data)
-    write_sentinel_file(data, pd.Timestamp(SENTINEL_TS).to_pydatetime())
+    try:
+        data, root, ckpt = (os.path.join(work, d) for d in ("data", "sink", "ckpt"))
+        pdf = synthesize_transcripts(n_convs=60, n_files=6, seed=42, late_frac=0.0)
+        write_arrival_files(pdf, data)
+        write_sentinel_file(data, pd.Timestamp(SENTINEL_TS).to_pydatetime())
 
-    base = {"RAP_DATA": data, "RAP_ROOT": root, "RAP_CKPT": ckpt}
-    p1 = _run_child({**base, "RAP_CPUS": "8", "RAP_SHUFFLE": "8", "RAP_FAIL_AFTER": "2"})
-    state_after_crash = _state_partitions(ckpt)
-    p2 = _run_child({**base, "RAP_CPUS": "32"})
-    state_after_resume = _state_partitions(ckpt)
+        base = {"RAP_DATA": data, "RAP_ROOT": root, "RAP_CKPT": ckpt}
+        p1 = _run_child({**base, "RAP_CPUS": "8", "RAP_SHUFFLE": "8", "RAP_FAIL_AFTER": "2"})
+        state_after_crash = _state_partitions(ckpt)
+        p2 = _run_child({**base, "RAP_CPUS": "32"})
+        state_after_resume = _state_partitions(ckpt)
 
-    checks = {
-        "phase1_crashed_mid_stream": p1["crashed"] and 2 not in p1["committed"],
-        "phase2_ran_to_completion": not p2["crashed"],
-        "crashed_batch_replayed": 2 in p2["committed"],
-        "no_holes": p2["committed"] == sorted(p2["committed"])
-        and p2["committed"] == list(range(len(p2["committed"]))),
-        "parallelism_actually_scaled_4x": p1["default_parallelism"] == 8
-        and p2["default_parallelism"] == 32,
-        "state_partitioning_pinned_by_checkpoint": state_after_crash == 8
-        and state_after_resume == 8,
-        "output_equals_batch_oracle": p2.get("equal_to_batch", False),
-    }
-    summary = {
-        "ok": all(checks.values()),
-        "checks": checks,
-        "phase1": p1,
-        "phase2": p2,
-        "state_partitions": {"after_crash": state_after_crash, "after_resume": state_after_resume},
-    }
-    print(json.dumps(summary))
-    return 0 if summary["ok"] else 1
+        checks = {
+            "phase1_crashed_mid_stream": p1["crashed"] and 2 not in p1["committed"],
+            "phase2_ran_to_completion": not p2["crashed"],
+            "crashed_batch_replayed": 2 in p2["committed"],
+            "no_holes": p2["committed"] == sorted(p2["committed"])
+            and p2["committed"] == list(range(len(p2["committed"]))),
+            "parallelism_actually_scaled_4x": p1["default_parallelism"] == 8
+            and p2["default_parallelism"] == 32,
+            "state_partitioning_pinned_by_checkpoint": state_after_crash == 8
+            and state_after_resume == 8,
+            "output_equals_batch_oracle": p2.get("equal_to_batch", False),
+        }
+        summary = {
+            "ok": all(checks.values()),
+            "checks": checks,
+            "phase1": p1,
+            "phase2": p2,
+            "state_partitions": {"after_crash": state_after_crash, "after_resume": state_after_resume},
+        }
+        print(json.dumps(summary))
+        return 0 if summary["ok"] else 1
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -134,41 +134,43 @@ def main() -> dict:
         extra_conf[k.strip()] = v.strip()
 
     work = tempfile.mkdtemp(prefix="pipeflow_phase_audit_")
-    src = os.path.join(work, "src")
-    pdf = chain.synthesize(42, n_convs=n_convs, n_files=8)
-    chain.write_files(pdf, src)
-    n_turns = len(pdf)
+    try:
+        src = os.path.join(work, "src")
+        pdf = chain.synthesize(42, n_convs=n_convs, n_files=8)
+        chain.write_files(pdf, src)
+        n_turns = len(pdf)
 
-    variants = [
-        # (name, sink, stages)
-        ("full", "exactly_once", {"dedupe": True, "agg": True}),
-        ("no_dedupe", "exactly_once", {"agg": True}),
-        ("dedupe_only", "exactly_once", {"dedupe": True}),
-        ("stateless", "exactly_once", {}),
-        ("full_noop_sink", "noop", {"dedupe": True, "agg": True}),
-    ]
-    # discarded warm-up of the full chain: the first streaming query in a JVM
-    # pays codegen compilation + RocksDB provider init (~5-8 s measured),
-    # which would otherwise be billed to whichever variant runs first
-    run_variant(spark, "warmup", src, work, "exactly_once", {"dedupe": True, "agg": True})
+        variants = [
+            # (name, sink, stages)
+            ("full", "exactly_once", {"dedupe": True, "agg": True}),
+            ("no_dedupe", "exactly_once", {"agg": True}),
+            ("dedupe_only", "exactly_once", {"dedupe": True}),
+            ("stateless", "exactly_once", {}),
+            ("full_noop_sink", "noop", {"dedupe": True, "agg": True}),
+        ]
+        # discarded warm-up of the full chain: the first streaming query in a JVM
+        # pays codegen compilation + RocksDB provider init (~5-8 s measured),
+        # which would otherwise be billed to whichever variant runs first
+        run_variant(spark, "warmup", src, work, "exactly_once", {"dedupe": True, "agg": True})
 
-    trials = int(os.environ.get("SPARK_GRAFT_AUDIT_TRIALS", "2"))
-    results = {}
-    for name, sink_mode, stages in variants:
-        best = None
-        for t in range(trials):
-            r = run_variant(spark, f"{name}_t{t}", src, work, sink_mode, stages)
-            if best is None or r["wall_sec"] < best["wall_sec"]:
-                best = r
-        results[name] = r = best
-        print(
-            f"{name:16s} wall={r['wall_sec']:7.2f}s "
-            f"({n_turns / r['wall_sec'] / 1000:6.1f}k turns/s)  "
-            f"addBatch={r['phase_ms']['addBatch'] / 1000:6.1f}s  "
-            f"state={ {k: round((v['updates_ms'] + v['removals_ms'] + v['commit_ms']) / 1000, 1) for k, v in r['state_ms'].items()} }"
-        )
-    g_after = gauge()
-    shutil.rmtree(work, ignore_errors=True)
+        trials = int(os.environ.get("SPARK_GRAFT_AUDIT_TRIALS", "2"))
+        results = {}
+        for name, sink_mode, stages in variants:
+            best = None
+            for t in range(trials):
+                r = run_variant(spark, f"{name}_t{t}", src, work, sink_mode, stages)
+                if best is None or r["wall_sec"] < best["wall_sec"]:
+                    best = r
+            results[name] = r = best
+            print(
+                f"{name:16s} wall={r['wall_sec']:7.2f}s "
+                f"({n_turns / r['wall_sec'] / 1000:6.1f}k turns/s)  "
+                f"addBatch={r['phase_ms']['addBatch'] / 1000:6.1f}s  "
+                f"state={ {k: round((v['updates_ms'] + v['removals_ms'] + v['commit_ms']) / 1000, 1) for k, v in r['state_ms'].items()} }"
+            )
+        g_after = gauge()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
     full, noop = results["full"], results["full_noop_sink"]
     deltas = {
